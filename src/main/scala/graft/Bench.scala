@@ -234,6 +234,12 @@ object Bench {
     val qsAdj = adjudicated.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val totalAdj = adjudicated.map(_._2).filter(_ >= 0).sum
+    // A failed pass records -1 and drops out of both totals, so a crash
+    // would LOWER the headline: the artifact names every query with a
+    // failed pass (sweep or isolated re-run) and the run exits 1.
+    val failed = raw.collect { case (k, ts)
+      if (ts ++ isolated.getOrElse(k, Nil)).exists(_ < 0) => k }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val loadJson = passLoads.toSeq.sortBy(_._1).map { case (k, ls) =>
       "\"" + k + "\":" + ls.map(fmt3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -273,7 +279,7 @@ object Bench {
     val extOk: Option[Boolean] = extCores.map(_ < 1.0)
     val extJson = extCores.map(fmt3).getOrElse("null")
     val okJson = extOk.map(_.toString).getOrElse("null")
-    val json = s"""{"metric":"total","value":$totalAdj,"unit":"sec","passes":2,"agg":"min","ts":"$stamp","load_end":${fmt3(loadavg())},"load_max":${fmt3(loadMax)},"ext_cores":$extJson,"load_ok":$okJson,"noisy":$noisyJson,"isolated":$isoJson,"queries":$qsAdj,"runs":$runs,"load":$loadJson,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$totalAdj,"unit":"sec","passes":2,"agg":"min","ts":"$stamp","load_end":${fmt3(loadavg())},"load_max":${fmt3(loadMax)},"ext_cores":$extJson,"load_ok":$okJson,"failed":$failedJson,"noisy":$noisyJson,"isolated":$isoJson,"queries":$qsAdj,"runs":$runs,"load":$loadJson,"sf":"$sfDir"}"""
     if (sys.env.get("SPARK_GRAFT_BENCH_REQUIRE_IDLE").contains("1")) {
       if (extOk.contains(false)) {
         System.err.println(
@@ -309,5 +315,9 @@ object Bench {
       System.err.println(s"[bench] result-file write failed: ${e.getMessage}")
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1965,10 +1965,11 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * (time/space derivatives over the streamed array; doreisa arrays are
     * arbitrary-rank, doreisa/head_node.py:49-58). Distributed via halo
     * exchange: every chunk ships only its 2N boundary FACES to grid
-    * neighbors (O(surface) shuffle, never O(volume)), then each chunk
-    * computes locally from its payload plus received halos — the
-    * Spark-first form of dask `map_overlap`. Halo zero-fills are cast to
-    * [[dtype]], so float32/int payloads are not widened. */
+    * neighbors (O(surface) shuffle, never O(volume) beyond the self
+    * payload's own re-group), then each chunk computes locally from its
+    * payload plus received halos — the Spark-first form of dask
+    * `map_overlap`. Halo zero-fills are cast to [[dtype]], so
+    * float32/int payloads are not widened. */
   def stencilLaplacian(native: Boolean = true): ChunkedArray = {
     val n = geom.dims
     val shape = geom.chunkShape

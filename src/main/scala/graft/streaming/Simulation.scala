@@ -56,6 +56,22 @@ case class ArrayDef(name: String, windowSize: Int = 1, preprocess: Column => Col
   */
 object Simulation {
 
+  /** Pack chunk rows into at most the cluster's task-slot count of input
+    * partitions before they reach a stateful operator. A source such as
+    * `MemoryStream` yields one partition per `addData` call, i.e. one
+    * per rank push, so without this every micro-batch pays one
+    * single-row map task per rank ahead of the state shuffle. The
+    * coalesce is narrow (no extra exchange) and a no-op when the source
+    * already has that many partitions or fewer.
+    *
+    * The width is `defaultParallelism`, read when the query is built:
+    * this assumes static allocation (local mode or a fixed executor
+    * set). Under dynamic allocation it can be the pre-executor value,
+    * which only narrows the packed map stage; the state shuffle keeps
+    * `spark.sql.shuffle.partitions`. */
+  private def packed(rows: DataFrame): DataFrame =
+    rows.coalesce(rows.sparkSession.sparkContext.defaultParallelism)
+
   /** Producer-side partial reduction: turn raw chunk rows
     * (name/timestep/nbChunks/pos/data) into [[ChunkMsg]]s, applying the
     * per-chunk preprocess at ingest — the same placement as the
@@ -64,7 +80,7 @@ object Simulation {
   def toMessages(chunks: DataFrame, defs: Seq[ArrayDef]): Dataset[ChunkMsg] = {
     import chunks.sparkSession.implicits._
     val pre = defs.map(d => d.name -> d.preprocess).toMap
-    val preprocessed = pre.foldLeft(chunks) { case (df, (nm, f)) =>
+    val preprocessed = pre.foldLeft(packed(chunks)) { case (df, (nm, f)) =>
       df.withColumn("data", when(col("name") === nm, transform(col("data"), f))
         .otherwise(col("data")))
     }
@@ -271,7 +287,7 @@ object Simulation {
     val timeout =
       if (doneTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
-    chunks.select(col("name"), col("timestep"), col("nbChunks"), col("pos"), col("data"))
+    packed(chunks.select(col("name"), col("timestep"), col("nbChunks"), col("pos"), col("data")))
       .as[RawChunk]
       .groupByKey(c => (c.name, c.timestep))
       .flatMapGroupsWithState(OutputMode.Append(), timeout)(
@@ -306,7 +322,14 @@ object Simulation {
     * [[assembleChunks]]); `op` runs as a distributed batch plan over
     * them, and `sink` receives the result DataFrame to write/aggregate —
     * chunk payloads never pass through the driver unless the sink
-    * chooses to collect. */
+    * chooses to collect.
+    *
+    * `sink` is called exactly once per micro-batch. The frame is not
+    * cached: each action the sink runs evaluates the chunk assembly
+    * once, so a sink that collects runs one Spark job per micro-batch.
+    * A micro-batch in which no timestep completed hands the sink an
+    * EMPTY frame (Spark's own `foreachBatch` contract), so a sink that
+    * must not act on empty input checks for it itself. */
   def runArrayOp(
       chunks: DataFrame,
       name: String,
@@ -318,10 +341,8 @@ object Simulation {
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[RawChunk], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val df = batch.toDF().select(col("timestep"), col("pos"), col("data"))
-          sink(op(ChunkedArray(df, geom)), batchId)
-        }
+        val df = batch.toDF().select(col("timestep"), col("pos"), col("data"))
+        sink(op(ChunkedArray(df, geom)), batchId)
       }
       .start()
 

@@ -222,12 +222,22 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(String, Long, Int, Seq[Int], Seq[Double])]
     val chunks = in.toDF().toDF("name", "timestep", "nbChunks", "pos", "data")
     val got = scala.collection.mutable.Map.empty[Long, Double]
+    val frames = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)] // (batchId, rows)
     val q = Simulation.runArrayOp(chunks, "a", geom,
       arr => arr.stencilLaplacian().sumPerTimestep(),
-      (df, _) => df.collect().foreach(r =>
-        got.synchronized { got(r.getLong(0)) = r.getDouble(1) }))
-    // t=0 complete; t=1 missing one chunk (nothing may emit for it)
-    in.addData(chunk(0, 0, 0), chunk(0, 0, 1), chunk(0, 1, 0), chunk(0, 1, 1),
+      (df, batchId) => {
+        val rows = df.collect()
+        frames.synchronized { frames += batchId -> rows.length }
+        rows.foreach(r => got.synchronized { got(r.getLong(0)) = r.getDouble(1) })
+      })
+    // a leading micro-batch that completes no timestep: the sink still
+    // runs once, on an empty frame, and records nothing
+    in.addData(chunk(0, 0, 0))
+    q.processAllAvailable()
+    assert(frames.synchronized(frames.toList) == List(0L -> 0))
+    assert(got.synchronized(got.isEmpty))
+    // t=0 completes across batches; t=1 missing one chunk (nothing may emit for it)
+    in.addData(chunk(0, 0, 1), chunk(0, 1, 0), chunk(0, 1, 1),
       chunk(1, 0, 0), chunk(1, 0, 1), chunk(1, 1, 0))
     q.processAllAvailable()
     assert(got.synchronized(got.keySet) == Set(0L))
@@ -241,6 +251,54 @@ class StreamingSpec extends AnyFunSuite {
     val lapSum = (for { i <- 0 to 3; j <- 0 to 3 }
       yield 4 * at(i, j) - at(i - 1, j) - at(i + 1, j) - at(i, j - 1) - at(i, j + 1)).sum
     assert(got.synchronized(got.toMap) == Map(0L -> lapSum, 1L -> 2 * lapSum))
+  }
+
+  test("runArrayOp runs each micro-batch as one job over packed input partitions") {
+    implicit val sc = spark.sqlContext
+    import graft.arrays.ArrayGeometry
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    // jobs by the streaming query id Spark puts in each job's properties;
+    // a sentinel job run afterwards on this thread marks that every
+    // earlier job start has reached the listener
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val tag = Option(p.getProperty("sql.streaming.queryId"))
+            .orElse(Option(p.getProperty("graft.spec.sentinel")).map(_ => "sentinel"))
+          tag.foreach(t => starts.add(t -> e))
+        }
+    }
+    val geom = ArrayGeometry(Seq(4, 4), Seq(2, 2))
+    val in = MemoryStream[(String, Long, Int, Seq[Int], Seq[Double])]
+    // one micro-batch of 16 ranks' pushes: one addData (one source
+    // partition) per single-chunk rank, all before the query starts
+    for (cr <- 0 until 4; cc <- 0 until 4)
+      in.addData(("a", 0L, 16, Seq(cr, cc), Seq.fill(4)((4 * cr + cc).toDouble)))
+    val chunks = in.toDF().toDF("name", "timestep", "nbChunks", "pos", "data")
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = Simulation.runArrayOp(chunks, "a", geom, _.sumPerTimestep(),
+        (df, _) => df.collect().foreach(r => got.synchronized { got += r.getLong(0) -> r.getDouble(1) }))
+      q.processAllAvailable()
+      q.stop()
+      spark.sparkContext.setLocalProperty("graft.spec.sentinel", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.spec.sentinel", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!starts.asScala.exists(_._1 == "sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(got.synchronized(got.toList) == List(0L -> 4.0 * (0 until 16).sum))
+      val jobs = starts.asScala.toList.collect { case (id, e) if id == q.id.toString => e }
+      assert(jobs.map(_.jobId).size == 1, "one Spark job per micro-batch")
+      // the leaf stage reads the source and feeds the state shuffle
+      val slots = spark.sparkContext.defaultParallelism
+      val leafTasks = jobs.flatMap(_.stageInfos).filter(_.parentIds.isEmpty).map(_.numTasks)
+      assert(leafTasks.nonEmpty)
+      assert(leafTasks.forall(_ <= slots), s"at most $slots tasks per leaf stage")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("runArrayOp runs the spectral face live: per-timestep FFT bit-equal to batch") {
