@@ -78,20 +78,16 @@ object ArrayQueries {
         })
         if (cache.size > 64) release()
       }
-      {
-        val arr = cache.getOrElseUpdate((s, dir, kind), {
-          val a = build
-          a.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          a
-        })
-        // Re-root consumers at the cache entry's InMemoryRelation (the
-        // Persists.cacheLeaf posture, r22): every arr face embeds the
-        // chunking tree otherwise — physical plans identical, consumer
-        // logical plans one leaf. Same A/B seam.
-        if (Persists.cacheLeaf)
-          arr.copy(df = org.apache.spark.sql.graftexpr.CacheBridge.asCachedLeaf(arr.df))
-        else arr
-      }
+      val arr = cache.getOrElseUpdate((s, dir, kind), {
+        val a = build
+        a.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        a
+      })
+      // Re-root consumers at the cache entry's InMemoryRelation (as
+      // Persists does, r22): every arr face embeds the chunking tree
+      // otherwise — physical plans identical, consumer logical plans
+      // one leaf.
+      arr.copy(df = org.apache.spark.sql.graftexpr.CacheBridge.asCachedLeaf(arr.df))
     }
 
   // Auxiliary persisted relations that FEED memoized arrays (the parity

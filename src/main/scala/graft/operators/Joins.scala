@@ -46,11 +46,6 @@ object Joins {
     * bloat codegen — take the sound DataFrame-join fallback. */
   val MaxInlineHot: Int = 64
 
-  /** Operational escape hatch (and A/B profiling seam): `false` makes
-    * [[skewBound]] emit the degenerate single-split columns without
-    * running the detection pass — exactly the naive self-join plan. */
-  @volatile var skewBoundEnabled: Boolean = true
-
   /** Session-lifetime memo of resolved hot-key sets, keyed by the
     * salted plan's canonicalized semantic hash + keys + cap (the
     * trained-model fingerprint posture: sources are static within a
@@ -119,7 +114,6 @@ object Joins {
       "saltedKeys and replicatedKeys must pair up 1:1")
     def degenerate = (salted.withColumn("__split", lit(0)),
       replicated.withColumn("__split_r", lit(0)))
-    if (!skewBoundEnabled) return degenerate
     // Phase 1 (eager, bounded, memoized): exact per-key counts, hot
     // keys only.
     val memoKey = salted.queryExecution.logical.canonicalized.semanticHash().toString +

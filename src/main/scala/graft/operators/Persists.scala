@@ -77,14 +77,9 @@ object Persists {
     * entry's InMemoryRelation — the exact leaf `useCachedData` would
     * substitute during `withCachedData` anyway — so consumer logical
     * plans hold ONE leaf and physical plans are bit-identical to the
-    * substituted full-tree spelling. A/B seam:
-    * SPARK_GRAFT_NO_CACHELEAF=1 restores the full-tree frames. */
-  @volatile var cacheLeaf: Boolean =
-    !sys.env.get("SPARK_GRAFT_NO_CACHELEAF").contains("1")
-
+    * substituted full-tree spelling. */
   private def leafed(df: DataFrame): DataFrame =
-    if (cacheLeaf) org.apache.spark.sql.graftexpr.CacheBridge.asCachedLeaf(df)
-    else df
+    org.apache.spark.sql.graftexpr.CacheBridge.asCachedLeaf(df)
 
   /** Unpersist and forget everything one session registered. */
   def release(s: SparkSession): Unit = reg.synchronized {

@@ -392,7 +392,6 @@ object Pipeline {
         dup3.as("dup3_frac"),
         topTok.as("top_tok_frac"),
         (dup3 > 0.2 || topTok > 0.3).as("is_repetitive"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Cross-source leakage matrix: distinct 3-grams shared by each source

@@ -34,21 +34,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Present {
 
-  /** A/B profiling seam (the [[Joins.skewBoundEnabled]] pattern):
-    * `false` makes both spellings plan the plain range-partitioned
-    * `.orderBy`, so a same-session harness can measure exactly what
-    * the single-partition presentation sort buys per query. */
-  @volatile var singlePartition: Boolean = true
-
   /** `transform`-style spelling: `df.transform(Present.sorted("a", "b"))`. */
   def sorted(first: String, rest: String*)(df: DataFrame): DataFrame =
-    if (singlePartition) df.repartition(1).sortWithinPartitions(first, rest: _*)
-    else df.orderBy((first +: rest).map(org.apache.spark.sql.functions.col): _*)
+    df.repartition(1).sortWithinPartitions(first, rest: _*)
 
   /** `transform`-style spelling with Column sort keys. */
   def sortedBy(cols: Column*)(df: DataFrame): DataFrame =
-    if (singlePartition) df.repartition(1).sortWithinPartitions(cols: _*)
-    else df.orderBy(cols: _*)
+    df.repartition(1).sortWithinPartitions(cols: _*)
 
   /** Corpus-scale per-row MAP pipelines whose declared output order is a
     * total key of their INPUT (per-document serving scans ending in
@@ -66,7 +58,9 @@ object Present {
     * Row order is bit-identical to `.orderBy(keys)`: the keys are a
     * total order by construction (SURVEY §5), and range partitioning +
     * within-partition sort IS that global sort, so oracles are
-    * untouched.
+    * untouched. That holds only while every operator between this sort
+    * and the query's result preserves partitioning and row order
+    * (projections, per-row maps): no trailing sort re-establishes it.
     *
     * Partition count is pinned to `defaultParallelism` (cores): the map
     * is CPU-bound, so width follows cores, not bytes — AQE's
@@ -79,28 +73,12 @@ object Present {
     * dynamicAllocation should floor it against the configured
     * spark.sql.shuffle.partitions (the cluster posture this repo
     * targets provisions executors before query construction). */
-  /** A/B profiling seam for [[spreadSorted]] (independent of
-    * [[singlePartition]]): `false` restores the map-then-`.orderBy`
-    * plan so a same-session harness can measure the spread's worth
-    * (env hook: SPARK_GRAFT_NO_SPREADSORT=1). */
-  @volatile var spreadScan: Boolean =
-    !sys.env.get("SPARK_GRAFT_NO_SPREADSORT").contains("1")
-
   def spreadSorted(first: String, rest: String*)(df: DataFrame): DataFrame = {
     val keys = (first +: rest).map(org.apache.spark.sql.functions.col)
-    if (spreadScan)
-      df.repartitionByRange(
-          df.sparkSession.sparkContext.defaultParallelism, keys: _*)
-        .sortWithinPartitions(keys: _*)
-    else df
+    df.repartitionByRange(
+        df.sparkSession.sparkContext.defaultParallelism, keys: _*)
+      .sortWithinPartitions(keys: _*)
   }
-
-  /** The trailing sort matching [[spreadSorted]]'s A/B seam: a no-op
-    * when the spread established the order, the plain `.orderBy` when
-    * the seam is off. */
-  def spreadSortedTail(first: String, rest: String*)(df: DataFrame): DataFrame =
-    if (spreadScan) df
-    else df.orderBy((first +: rest).map(org.apache.spark.sql.functions.col): _*)
 
   /** Bounded-output presentation sort with ZERO added exchange (r22):
     * `coalesce(1)` + `sortWithinPartitions`.
@@ -122,25 +100,11 @@ object Present {
     * per query attacks both halves.
     *
     * Row order is bit-identical to `.orderBy(keys)` (total keys, same
-    * global sort); the seam restores the `.orderBy` spelling for
-    * paired A/B (env hook: SPARK_GRAFT_NO_FUSEDSORT=1). */
-  @volatile var fusedSort: Boolean =
-    !sys.env.get("SPARK_GRAFT_NO_FUSEDSORT").contains("1")
-
-  /** With the [[fusedSort]] seam OFF, fall back to [[sorted]]'s
-    * `repartition(1)` spelling instead of `.orderBy` (env hook:
-    * SPARK_GRAFT_FUSED_FALLBACK=single). Paired A/Bs of sites converted
-    * FROM [[sorted]] need this so the off leg reproduces the r21
-    * spelling, not the pre-r21 range sort. */
-  @volatile var fusedFallbackSingle: Boolean =
-    sys.env.get("SPARK_GRAFT_FUSED_FALLBACK").contains("single")
-
+    * global sort). */
   def fused(first: String, rest: String*)(df: DataFrame): DataFrame =
     fusedBy((first +: rest).map(org.apache.spark.sql.functions.col): _*)(df)
 
   /** [[fused]] with Column sort keys (the [[sortedBy]] twin). */
   def fusedBy(cols: Column*)(df: DataFrame): DataFrame =
-    if (fusedSort) df.coalesce(1).sortWithinPartitions(cols: _*)
-    else if (fusedFallbackSingle) df.repartition(1).sortWithinPartitions(cols: _*)
-    else df.orderBy(cols: _*)
+    df.coalesce(1).sortWithinPartitions(cols: _*)
 }

@@ -43,7 +43,6 @@ object TextAnalysis {
       size(col("tk")).cast("bigint").as("n_tokens"),
       regexp_count(col("text"), lit("[a-z]+")).cast("bigint").as("n_alpha_runs"),
       length(col("text")).cast("bigint").as("n_chars_txt"))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** Lexical-diversity profile per document — the vocabulary-richness
     * gate next to [[txtQuality]]'s surface heuristics (a low type-token
@@ -95,7 +94,6 @@ object TextAnalysis {
 
   def txtQuality(s: SparkSession, dir: String): DataFrame =
     qualityCols(withTokensSorted(s, dir))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** The language-ID prediction columns over a tokenized relation —
     * shared by [[txtLangid]] (sorted per-doc face) and
@@ -118,7 +116,6 @@ object TextAnalysis {
   /** Heuristic language ID from stopword profiles, checked vs the label. */
   def txtLangid(s: SparkSession, dir: String): DataFrame =
     langidPred(withTokensSorted(s, dir))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** Language-ID CONFUSION MATRIX — the evaluation a curator reads
     * after [[txtLangid]]'s per-doc predictions (which languages leak
@@ -146,7 +143,6 @@ object TextAnalysis {
       // min over the distinct-gram hash set == min over all gram hashes
       array_min(org.apache.spark.sql.graftexpr.TextExpressions
         .hashWordNgrams(col("text"), 3)).as("fp_min_shingle"))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** PII scrubbing: multi-pattern regex redaction with per-pattern match
     * counts and a checksum of the scrubbed text — all narrow codegen'd
@@ -180,7 +176,6 @@ object TextAnalysis {
       regexp_count(col("txt"), lit(PhoneRe)).cast("bigint").as("n_phones"),
       md5(regexp_replace(regexp_replace(col("txt"), EmailRe, "<EMAIL>"),
         PhoneRe, "<PHONE>")).as("scrubbed_md5"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Corpus-level phrase statistics: the global top-20 word bigrams by
@@ -428,7 +423,6 @@ object TextAnalysis {
       .select(col("doc_id"), clfMarginCol(w, bias, col("tk")).as("margin"))
       .select(col("doc_id"), col("margin"),
         when(col("margin") > 0L, 1L).otherwise(0L).as("keep"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Oracle: replay the scoring from LITERAL trained weights — murmur3
@@ -613,7 +607,6 @@ object TextAnalysis {
         when(col("n_tokens") > 0L &&
           col("qlog_sum") >= col("n_tokens") * lit(LmKeepThrQ), 1L)
           .otherwise(0L).as("keep"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Oracle: replay the scoring from the LITERAL trained tables — the
@@ -1577,7 +1570,6 @@ object TextAnalysis {
         element_at(col("st"), 2).as("n_wcps"),
         element_at(col("st"), 3).as("n_pieces"),
         element_at(col("st"), 4).as("qscore_sum"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Corpus unigram piece distribution (top-30) — txt_bpe_freq's twin

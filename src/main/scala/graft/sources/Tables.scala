@@ -88,8 +88,8 @@ object Tables {
   // defaultParallelism-width repartition before CPU-heavy kernel passes
   // when the source scan fits one split) was built and then REVERTED on
   // measurement: the explicit width disables AQE coalescing and
-  // over-splits the tiny local relations, and a paired A/B
-  // (SPARK_GRAFT_NO_SPREAD seam) measured every converted query SLOWER
+  // over-splits the tiny local relations, and a paired A/B (a seam
+  // since removed) measured every converted query SLOWER
   // with it (txt_docfreq 0.84 vs 0.34 s warm, dd_cdc_chunks 0.93 vs
   // 0.41, dd_substr_tok 2.77 vs 1.67). The surviving spreads are the
   // two AQE-coalescible `.repartition(col("doc_id"))` calls in

@@ -739,23 +739,29 @@ class ChunkedArraySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("release unpersists memoized chunk relations (memory release contract)") {
-    import graft.operators.{ArrayQueries, Persists}
-    // storageLevel is a cache lookup by PLAN — run the contract on the
-    // underlying full-tree frames (r22 leaf re-rooting off); the leaf
-    // only changes what consumers embed, not the persist lifecycle
-    Persists.cacheLeaf = false
-    try {
+    import graft.operators.ArrayQueries
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the memo hands out frames re-rooted at the cache entry's
+    // InMemoryRelation; its builder holds the persisted column buffers
+    def builderOf(a: ChunkedArray) = a.df.queryExecution.analyzed match {
+      case imr: InMemoryRelation => imr.cacheBuilder
+      case other => fail(s"expected the memo's InMemoryRelation leaf, got:\n$other")
+    }
+    def request(): ChunkedArray = {
       val dir = "/root/testdata/sf0.001"
-      val arr = ArrayQueries.eventsArray1dCached(spark, dir)
-      arr.df.count()
-      assert(arr.df.storageLevel.useMemory || arr.df.storageLevel.useDisk)
-      ArrayQueries.release(spark)
-      assert(arr.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      // next request rebuilds and re-persists, then clean up again
-      val arr2 = ArrayQueries.eventsArray1dCached(spark, dir)
-      assert(arr2.df.storageLevel.useMemory || arr2.df.storageLevel.useDisk)
-      ArrayQueries.release(spark)
-    } finally Persists.cacheLeaf = true
+      ArrayQueries.eventsArray1dCached(spark, dir)
+    }
+    val arr = request()
+    arr.df.count()
+    assert(builderOf(arr).isCachedColumnBuffersLoaded)
+    ArrayQueries.release(spark)
+    assert(!builderOf(arr).isCachedColumnBuffersLoaded, "release must drop the blocks")
+    // next request rebuilds and re-persists, then clean up again
+    val arr2 = request()
+    assert(!(builderOf(arr2) eq builderOf(arr)))
+    arr2.df.count()
+    assert(builderOf(arr2).isCachedColumnBuffersLoaded)
+    ArrayQueries.release(spark)
   }
 
   /** Flatten to (timestep, global coords) -> value with independent

@@ -662,6 +662,31 @@ class FunctionsSpec extends AnyFunSuite {
     assert(collisions == 0, s"$collisions deterministic p-stride collisions")
   }
 
+  test("cents() diverges from dec2*100 past 2 fraction digits (pinned)") {
+    import graft.operators.Relational
+    // cents rounds the double PRODUCT x*100; the decimal cast rounds the
+    // shortest decimal reading of x. They agree on <= 2 fraction digits
+    // and may not beyond: 1.005*100 and 0.285*100 land just below .5 in
+    // binary, 2.675*100 rounds to exactly 267.5, and 0.125 is exact
+    val got = Seq(1.005, 2.675, 0.125, 0.285).toDF("x")
+      .select(col("x"), Relational.cents("x"),
+        (col("x").cast("decimal(18,2)") * 100).cast("long"))
+      .collect().map(r => r.getDouble(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == Map(1.005 -> (100L, 101L), 2.675 -> (268L, 268L),
+      0.125 -> (13L, 13L), 0.285 -> (28L, 29L)))
+  }
+
+  test("every column cents() reads has <= 2 fraction digits at sf0.001") {
+    // the precondition under which cents == dec2*100 (Relational.cents)
+    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+    for (c <- Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")) {
+      val vs = li.select(col(c)).as[Double].collect()
+      assert(vs.nonEmpty)
+      val bad = vs.filterNot(v => (BigDecimal(v) * 100).isWhole)
+      assert(bad.isEmpty, s"$c has values with > 2 fraction digits: ${bad.take(5).mkString(",")}")
+    }
+  }
+
   test("sketch aggregates stay within their error bounds") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val exact = li

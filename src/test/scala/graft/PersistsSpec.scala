@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,26 +17,22 @@ class PersistsSpec extends AnyFunSuite {
   private def rel() = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "s")
     .groupBy("s").agg(count(lit(1)).as("n"))
 
+  /** The cache entry a leafed frame is re-rooted at. */
+  private def leafOf(df: DataFrame) = df.queryExecution.analyzed match {
+    case imr: InMemoryRelation => imr.cacheBuilder
+    case other => fail(s"expected a bare InMemoryRelation leaf, got:\n$other")
+  }
+
   test("equivalent plans reuse the FIRST persisted instance") {
-    // instance identity is the UNDERLYING memo guarantee — assert it
-    // with the r22 cache-leaf re-rooting off, then assert the leafed
-    // spelling re-roots BOTH constructions at the same InMemoryRelation
-    Persists.cacheLeaf = false
-    try {
-      val a = Persists.cached(rel())
-      val b = Persists.cached(rel())
-      assert(a eq b, "a fresh but semantically identical plan must reuse the instance")
-      assert(a.storageLevel == StorageLevel.MEMORY_AND_DISK)
-      assert(a.collect().length == 2)
-    } finally Persists.cacheLeaf = true
-    val la = Persists.cached(rel())
+    // storageLevel is a cache lookup by PLAN: meaningful on the INPUT
+    // frame the registry persisted, not on the leafed frame it returns
+    val before = Persists.size
+    val first = rel()
+    val la = Persists.cached(first)
     val lb = Persists.cached(rel())
-    def leafOf(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.analyzed match {
-        case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          imr.cacheBuilder
-        case other => fail(s"expected a bare InMemoryRelation leaf, got:\n$other")
-      }
+    assert(Persists.size == before + 1,
+      "a fresh but semantically identical plan must reuse the registered instance")
+    assert(first.storageLevel == StorageLevel.MEMORY_AND_DISK)
     assert(leafOf(la) eq leafOf(lb),
       "leafed constructions must share ONE cache entry")
     assert(la.collect().length == 2)
@@ -49,20 +46,15 @@ class PersistsSpec extends AnyFunSuite {
   }
 
   test("release(session) unpersists and the next call re-registers") {
-    // storageLevel is a cache lookup by PLAN — meaningful on the
-    // underlying full-tree frame, so run this contract with the r22
-    // leaf re-rooting off (the leaf only changes what consumers embed)
-    Persists.cacheLeaf = false
-    try {
-      val key = Seq((9L, "z")).toDF("id", "s").groupBy("id").agg(max("s").as("m"))
-      val a = Persists.cached(key)
-      assert(a.storageLevel != StorageLevel.NONE)
-      Persists.release(spark)
-      assert(a.storageLevel == StorageLevel.NONE, "release must unpersist")
-      val b = Persists.cached(Seq((9L, "z")).toDF("id", "s")
-        .groupBy("id").agg(max("s").as("m")))
-      assert(!(a eq b) && b.storageLevel == StorageLevel.MEMORY_AND_DISK)
-      Persists.releaseAll()
-    } finally Persists.cacheLeaf = true
+    def key() = Seq((9L, "z")).toDF("id", "s").groupBy("id").agg(max("s").as("m"))
+    val input = key()
+    val a = Persists.cached(input)
+    assert(input.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    Persists.release(spark)
+    assert(input.storageLevel == StorageLevel.NONE, "release must unpersist")
+    val again = key()
+    val b = Persists.cached(again)
+    assert(!(leafOf(a) eq leafOf(b)) && again.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    Persists.releaseAll()
   }
 }

@@ -1,7 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.sum
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Present
 
 /** Suite-wide plan-shape regression gate: no query may broadcast a
   * relation whose size is proportional to a FACT table (lineitem,
@@ -18,6 +26,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+  import spark.implicits._
   private val dir = "/root/testdata/sf0.001"
   private val fact = Set("lineitem", "orders", "events", "documents", "embeddings")
 
@@ -294,6 +303,65 @@ class PlanShapeSpec extends AnyFunSuite {
         |   +- FileScan parquet [id#0L,a#1] Batched: true, DataFilters: [isnotnull(id#0L)], Format: Parquet""".stripMargin
     assert(scanFilterGraftHits(clean).isEmpty,
       "plain column filters must pass; graft_ in the projection is fine")
+  }
+
+  // Presentation sorts: what each surviving Present spelling adds above
+  // its child, and the spreadSorted serving queries still ending in the
+  // doc_id range order the spread established (nothing between the
+  // spread and the result may re-partition or re-order).
+
+  /** The physical plan as planned (exchanges inserted), before AQE
+    * re-optimizes stages at run time. */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.initialPlan
+    case p => p
+  }
+
+  private def exchanges(df: DataFrame) =
+    physical(df).collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+
+  /** A bounded aggregate: its own hash exchange sits below the sort. */
+  private lazy val agg = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "s")
+    .groupBy("s").agg(sum("id").as("t"))
+
+  test("Present.fused adds no exchange above its child") {
+    val df = agg.transform(Present.fused("s"))
+    assert(exchanges(agg).nonEmpty)
+    assert(exchanges(df).size == exchanges(agg).size, physical(df))
+    assert(physical(df).outputPartitioning == SinglePartition, physical(df))
+    assert(df.as[(String, Long)].collect().toSeq == Seq(("a", 4L), ("b", 2L)))
+  }
+
+  test("Present.sorted adds exactly one SinglePartition exchange, no range partitioning") {
+    val df = agg.transform(Present.sorted("s"))
+    val added = exchanges(df).size - exchanges(agg).size
+    assert(added == 1, physical(df))
+    assert(exchanges(df).count(_ == SinglePartition) ==
+      exchanges(agg).count(_ == SinglePartition) + 1, physical(df))
+    assert(!exchanges(df).exists(_.isInstanceOf[RangePartitioning]), physical(df))
+    assert(df.as[(String, Long)].collect().toSeq == Seq(("a", 4L), ("b", 2L)))
+  }
+
+  private def isDocIdAsc(o: SortOrder): Boolean = o.direction == Ascending &&
+    (o.child match { case a: AttributeReference => a.name == "doc_id"; case _ => false })
+
+  /** Per-document serving queries that establish their declared
+    * `ORDER BY doc_id` with `Present.spreadSorted` below the kernel map. */
+  private val spreadServing = Seq("txt_classifier_score", "txt_fingerprint",
+    "txt_langid", "txt_lm_score", "txt_pii", "txt_quality", "txt_repetition",
+    "txt_sp_encode", "txt_tokens")
+
+  spreadServing.foreach { name =>
+    test(s"$name ends range-partitioned and ordered on doc_id") {
+      val p = physical(SparkEntry.queries(name)(spark, dir))
+      p.outputPartitioning match {
+        case RangePartitioning(order, _) =>
+          assert(order.size == 1 && isDocIdAsc(order.head), p)
+        case other => fail(s"$name output partitioning is $other, not a doc_id range:\n$p")
+      }
+      assert(p.outputOrdering.headOption.exists(isDocIdAsc),
+        s"$name output ordering ${p.outputOrdering} does not start with doc_id ASC:\n$p")
+    }
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
