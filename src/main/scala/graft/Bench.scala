@@ -106,10 +106,9 @@ object Bench {
         System.err.println("[bench] SparkContext died; restarting session")
         SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
         graft.sources.Tables.clearCache()
-        // unpersist against a dead context can itself throw; the memo
-        // entries must go regardless so the new session rebuilds them.
-        try graft.operators.ArrayQueries.release()
-        catch { case _: Throwable => () }
+        // forget the dead session's memo entries (errors from its dead
+        // context are swallowed) so the new session rebuilds them
+        graft.operators.Memo.release(spark)
         spark = newSession()
       }
       val t0 = System.nanoTime()
@@ -164,21 +163,21 @@ object Bench {
     // a noisy machine (e.g. SPARK_GRAFT_ONLY=ev_json,q_topn).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Between FAMILIES (the alphabetic prefix groups: arr, dd, ev, mm,
-    // pipe, q, sim, smp, txt), drop the finished family's persisted
-    // relations and memoized arrays: they are dead weight for the rest
-    // of the sweep, and accumulated cache blocks were the r16 drift —
-    // the r17 A/B measured the common-171 subset ALONE at 49.6 s
+    // pipe, q, sim, smp, txt), release the session's memo entries and
+    // persisted relations (Memo.release): they are dead weight for the
+    // rest of the sweep, and accumulated cache blocks were the r16 drift
+    // — the r17 A/B measured the common-171 subset ALONE at 49.6 s
     // (ext_cores 0.0) vs 58.5-59.2 s inside r16's full-sweep JVM with
-    // unchanged plans. Trained-model memos (merge tables, centroids,
-    // LM/classifier artifacts) survive — only storage blocks go. The
-    // isolated re-run tail rebuilds cold if it revisits a family; the
-    // headline stays min over all passes.
+    // unchanged plans. Session-independent artifacts (merge tables,
+    // centroids, LM/classifier models, the arr Gram and its fits)
+    // survive, guarded by their data fingerprint — only storage blocks
+    // and session-held frames go. The isolated re-run tail rebuilds cold
+    // if it revisits a family; the headline stays min over all passes.
     var lastFamily: String = null
     def familyBoundary(n: String): Unit = {
       val fam = n.takeWhile(_.isLetter)
       if (lastFamily != null && fam != lastFamily) {
-        try graft.operators.ArrayQueries.release(spark)
-        catch { case _: Throwable => () }
+        graft.operators.Memo.release(spark)
       }
       lastFamily = fam
     }

@@ -199,7 +199,7 @@ object ScaleProbe {
       // instead of per-partition rows x100).
       def restart(): Unit = {
         try {
-          graft.operators.ArrayQueries.release()
+          graft.operators.Memo.release(spark)
           graft.sources.Tables.clearCache()
         } catch { case _: Throwable => () }
         try spark.stop() catch { case _: Throwable => () }

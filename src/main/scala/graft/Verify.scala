@@ -20,11 +20,9 @@ object Verify {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the sim_*_trained oracles must embed THIS dir's fits even if some
-    // other dir was trained in the same JVM
-    graft.operators.Similarity.setOracleDir(sfDir)
-    graft.operators.TextAnalysis.setOracleDir(sfDir)
-    graft.operators.ArrayQueries.setOracleDir(sfDir)
+    // the trained-literal oracles must embed THIS dir's fits even if
+    // some other dir was trained in the same JVM
+    graft.operators.Memo.setOracleDir(sfDir)
     new java.io.File(outDir).mkdirs()
     // Delete any previous output FIRST: a query failing at analysis time
     // never reaches the overwrite, and a stale directory from an earlier

@@ -57,73 +57,22 @@ object ArrayQueries {
   }
 
   // The unfiltered 1-d/2-d arrays feed most §2.A queries; memoize + persist
-  // the (small) chunk relations per session+dir, like a real in-situ run
-  // would keep the current timestep window resident (doreisa holds chunk
-  // refs in the object store, doreisa/head_node.py:70).
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), ChunkedArray]
-  // Synchronized like Pipeline.tokenizedDocs: build+persist are lazy
-  // metadata work (no job runs inside), and the lock means exactly one
-  // persist per key ever wins (a TrieMap getOrElseUpdate can run the
-  // builder twice under contention, leaking the loser's persisted
-  // blocks). The >64 bound evicts only STOPPED sessions' entries first
-  // (bench restart-on-death path); live entries go only if that's not
-  // enough — correctness survives either way, persist is a cache.
-  private def cached(s: SparkSession, dir: String, kind: String)(build: => ChunkedArray): ChunkedArray =
-    cache.synchronized {
-      if (cache.size > 64) {
-        val stopped = cache.keys.filter(_._1.sparkContext.isStopped).toSeq
-        stopped.foreach(k => cache.remove(k).foreach { a =>
-          try a.df.unpersist(blocking = false) catch { case _: Throwable => () }
-        })
-        if (cache.size > 64) release()
-      }
-      val arr = cache.getOrElseUpdate((s, dir, kind), {
-        val a = build
-        a.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        a
-      })
-      // Re-root consumers at the cache entry's InMemoryRelation (as
-      // Persists does, r22): every arr face embeds the chunking tree
-      // otherwise — physical plans identical, consumer logical plans
-      // one leaf.
-      arr.copy(df = org.apache.spark.sql.graftexpr.CacheBridge.asCachedLeaf(arr.df))
-    }
-
-  // Auxiliary persisted relations that FEED memoized arrays (the parity
-  // cell relation below); same lifecycle as `cache`, released together.
-  private val auxCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** Release memoized chunk relations — the batch analog of the
-    * reference's memory-release-after-window-expiry contract
-    * (tests/test_memory_release.py: chunks are freed once no window can
-    * reference them). Unpersists the backing blocks (blocking, so the
-    * executors have actually dropped them on return) and forgets the memo
-    * entries; the next request rebuilds from source. Pass a session to
-    * release only its arrays, or nothing to release everything. */
-  def release(s: SparkSession = null): Unit = {
-    cache.keys.filter(k => s == null || k._1 == s).toSeq
-      .foreach(k => cache.remove(k).foreach(_.df.unpersist(blocking = true)))
-    auxCache.keys.filter(k => s == null || k._1 == s).toSeq
-      .foreach(k => auxCache.remove(k).foreach(_.unpersist(blocking = true)))
-    // the persisted Gram RELATION lives in the Persists registry — if it
-    // survived release, a re-run would re-canonicalize to the same plan
-    // and Persists.cached would hand back the stale materialized blocks,
-    // so the "next request rebuilds from source" contract needs the
-    // registry dropped together with the chunk memos (ADVICE r16)
-    if (s == null) Persists.releaseAll() else Persists.release(s)
-    // every k x k model artifact (and the fits/moments/factorizations
-    // derived from it) derives from the released relations — drop them
-    // together so a data refresh can't serve a stale model
-    gramByDir.clear()
-    momentsByDir.clear()
-    lstsqByDir.clear()
-    svdByDir.clear()
-    pcaByDir.clear()
-    modesByDir.clear()
-    qrByDir.clear()
+  // the (small) chunk relations per session+dir in the [[Memo]] registry,
+  // like a real in-situ run would keep the current timestep window
+  // resident (doreisa holds chunk refs in the object store,
+  // doreisa/head_node.py:70). Consumers are re-rooted at the cache
+  // entry's InMemoryRelation (as Persists does, r22): every arr face
+  // embeds the chunking tree otherwise — physical plans identical,
+  // consumer logical plans one leaf.
+  private def cached(s: SparkSession, dir: String, kind: String)(
+      build: => ChunkedArray): ChunkedArray = {
+    val a = Memo.relationOf(s, dir, s"arr.$kind", "events")(build)(_.df)
+    a.copy(df = org.apache.spark.sql.graftexpr.CacheBridge.asCachedLeaf(a.df))
   }
+
+  /** Forwarder to [[Memo.release]], kept for the benchmark package,
+    * which calls it by this name. */
+  def release(s: SparkSession): Unit = Memo.release(s)
 
   def eventsArray1d(s: SparkSession, dir: String, filter: Column = lit(true)): ChunkedArray =
     chunks1d(cells1d(Tables.load(s, dir, "events").where(filter)))
@@ -157,10 +106,8 @@ object ArrayQueries {
     * — and it feeds FOUR consumers (two arrays × two queries), so the
     * fact scan runs once per session instead of twice per evaluation. */
   private def parityCells(s: SparkSession, dir: String): DataFrame =
-    // same single-persist-wins lock as `cached` (lock order is always
-    // cache -> auxCache, via parityArray's build lambda)
-    auxCache.synchronized { auxCache.getOrElseUpdate((s, dir, "parity_cells"), {
-      val df = Tables.load(s, dir, "events")
+    Memo.relation(s, dir, "arr.parity_cells", "events") {
+      Tables.load(s, dir, "events")
         .select(
           datediff(to_date(col("ts")), lit("2024-01-01")).cast("bigint").as("timestep"),
           (col("user_id") % 64).cast("int").as("u"),
@@ -170,9 +117,7 @@ object ArrayQueries {
         .agg(
           sum(when(col("even"), dec2(col("value")))).cast("double").as("cell_even"),
           sum(when(!col("even"), dec2(col("value")))).cast("double").as("cell_odd"))
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
-    }) }
+    }
 
   /** One parity's dense 1-d array, built from [[parityCells]] (not its
     * own scan) and memoized like the unfiltered arrays. */
@@ -485,9 +430,8 @@ object ArrayQueries {
     * TSQR/svd_compressed posture, like the sim_*_trained k-means fits).
     * The collect is k² = 64 doubles — a model artifact, not data. */
   def arrSvdVals(s: SparkSession, dir: String): DataFrame = {
-    val sv = graft.arrays.Eigen.singularValuesFromGram(gramMatrix(s, dir))
-    svdByDir.update(dir, sv)
-    lastDirRef.set(dir)
+    val sv = Memo.artifact(s, dir, "arr.svd", "events")(
+      graft.arrays.Eigen.singularValuesFromGram(gramMatrix(s, dir)))
     import s.implicits._
     sv.zipWithIndex.map { case (v, k) => (k.toLong, v) }
       .toDF("k", "sigma").transform(Present.fused("k"))
@@ -507,9 +451,8 @@ object ArrayQueries {
     * × identical literal weights × identical fold order = identical
     * result bits, SURVEY §5's ordered-fold discipline). */
   def arrPcaProject(s: SparkSession, dir: String): DataFrame = {
-    val top = graft.arrays.Eigen.symEigen(gramMatrix(s, dir))._2.take(PcaK)
-    pcaByDir.update(dir, top)
-    lastDirRef.set(dir)
+    val top = Memo.artifact(s, dir, "arr.pca", "events")(
+      graft.arrays.Eigen.symEigen(gramMatrix(s, dir))._2.take(PcaK))
     orderedRowFold(s, dir, top, "pc")
   }
 
@@ -547,15 +490,15 @@ object ArrayQueries {
     * (ArrayLinalgSpec). Refuses rank-deficient modes loudly (σ_k ≈ 0
     * would be a divide-by-noise, not a mode). */
   def arrSvdModes(s: SparkSession, dir: String): DataFrame = {
-    val (eig, vecs) = graft.arrays.Eigen.symEigen(gramMatrix(s, dir))
-    val weights = (0 until ModesK).map { k =>
-      val sigma = math.sqrt(math.max(eig(k), 0.0))
-      require(sigma > 1e-9,
-        s"arr_svd_modes: mode $k is rank-deficient (sigma=$sigma)")
-      vecs(k).map(_ / sigma)
+    val weights = Memo.artifact(s, dir, "arr.modes", "events") {
+      val (eig, vecs) = graft.arrays.Eigen.symEigen(gramMatrix(s, dir))
+      (0 until ModesK).map { k =>
+        val sigma = math.sqrt(math.max(eig(k), 0.0))
+        require(sigma > 1e-9,
+          s"arr_svd_modes: mode $k is rank-deficient (sigma=$sigma)")
+        vecs(k).map(_ / sigma)
+      }
     }
-    modesByDir.update(dir, weights)
-    lastDirRef.set(dir)
     orderedRowFold(s, dir, weights, "u")
   }
 
@@ -584,7 +527,6 @@ object ArrayQueries {
     // join.
     val g = gramMatrix(s, dir)
     val (cs, nRows) = moments2d(s, dir)
-    lastDirRef.set(dir)
     val c = geom2d.dimSize(1)
     val nD = nRows.toDouble
     import s.implicits._
@@ -614,7 +556,6 @@ object ArrayQueries {
     // doubles; n ≥ 2 always (the table has ≥ 2 timesteps).
     val g = gramMatrix(s, dir)
     val (cs, nRows) = moments2d(s, dir)
-    lastDirRef.set(dir)
     val c = geom2d.dimSize(1)
     val nD = nRows.toDouble
     import s.implicits._
@@ -634,9 +575,8 @@ object ArrayQueries {
     * the oracle embeds the factor as round-trip-exact literals. */
   def arrQrR(s: SparkSession, dir: String): DataFrame = {
     val n = geom2d.dimSize(1)
-    val ru = graft.arrays.Eigen.cholUpper(gramMatrix(s, dir))
-    qrByDir.update(dir, ru)
-    lastDirRef.set(dir)
+    val ru = Memo.artifact(s, dir, "arr.qr", "events")(
+      graft.arrays.Eigen.cholUpper(gramMatrix(s, dir)))
     import s.implicits._
     (for (i <- 0 until n; j <- i until n) yield (i.toLong, j.toLong, ru(i)(j)))
       .toDF("i", "j", "r_val").transform(Present.fused("i", "j"))
@@ -647,17 +587,12 @@ object ArrayQueries {
   private[graft] final case class LstsqFit(
       beta: IndexedSeq[Double], icept: Double, rss: Double, r2: Double)
 
-  private val lstsqByDir =
-    scala.collection.concurrent.TrieMap.empty[String, LstsqFit]
-  private val momentsByDir =
-    scala.collection.concurrent.TrieMap.empty[String, (Array[Double], Long)]
-
   /** Column sums + stacked row count of the 2-d field — arr_corrcoef's
     * first moments (chunk-local axis fold, exact decimal rollup),
     * collected as a bounded artifact (C doubles + one long) and
-    * memoized per dir like [[gramMatrix]]. */
+    * memoized like [[gramMatrix]]. */
   private def moments2d(s: SparkSession, dir: String): (Array[Double], Long) =
-    momentsByDir.getOrElseUpdate(dir, {
+    Memo.artifact(s, dir, "arr.moments", "events") {
       val arr = eventsArray2dCached(s, dir)
       val cs = new Array[Double](geom2d.dimSize(1))
       arr.axisSum(0).rowsNd
@@ -666,7 +601,7 @@ object ArrayQueries {
         .collect().foreach(r => cs(r.getLong(0).toInt) = r.getDouble(1))
       val t = arr.df.select(countDistinct(col("timestep"))).head().getLong(0)
       (cs, t * geom2d.dimSize(0).toLong)
-    })
+    }
 
   /** Fit `column k-1 ~ columns 0..k-2 + intercept` over the
     * timestep-stacked field by the normal equations — dask
@@ -681,7 +616,7 @@ object ArrayQueries {
     * moments: rss = yᵀy - 2βᵀv + βᵀMβ, tss = yᵀy - (1ᵀy)²/n, both
     * folded in fixed order. */
   private[graft] def lstsqFit(s: SparkSession, dir: String): LstsqFit =
-    lstsqByDir.getOrElseUpdate(dir, {
+    Memo.artifact(s, dir, "arr.lstsq", "events") {
       val p = geom2d.dimSize(1) - 1
       val g = gramMatrix(s, dir)
       val (cs, nRows) = moments2d(s, dir)
@@ -710,7 +645,7 @@ object ArrayQueries {
       val tss = yy - cs(p) * cs(p) / nRows.toDouble
       val r2 = if (tss != 0.0) 1.0 - rss / tss else 0.0
       LstsqFit(sol.take(p), sol(p), rss, r2)
-    })
+    }
 
   /** dask `da.linalg.lstsq` — the fitted model as a (term, value)
     * relation: slopes x0..x_{k-2}, intercept, rss, r2. The oracle
@@ -719,7 +654,6 @@ object ArrayQueries {
     * hash-gated through arr_gram's exact oracle). */
   def arrLstsq(s: SparkSession, dir: String): DataFrame = {
     val f = lstsqFit(s, dir)
-    lastDirRef.set(dir)
     import s.implicits._
     (f.beta.zipWithIndex.map { case (b, j) => (s"x$j", b) } :+
       (("intercept", f.icept)) :+ (("rss", f.rss)) :+ (("r2", f.r2)))
@@ -737,7 +671,6 @@ object ArrayQueries {
     * engines (SURVEY §5's quantized-integer rollup discipline). */
   def arrLstsqResid(s: SparkSession, dir: String): DataFrame = {
     val f = lstsqFit(s, dir)
-    lastDirRef.set(dir)
     val k = geom2d.dimSize(1)
     val cells = eventsArray2dCached(s, dir).rows2d
     val byRow = cells.groupBy("timestep", "i")
@@ -1566,45 +1499,23 @@ object ArrayQueries {
       |  LEFT JOIN raw3 r ON r.timestep = d.timestep AND r.u = uu.u
       |    AND r.h = hh.h AND r.w = ww.w)""".stripMargin
 
-  /** [[arrSvdVals]]' computed singular values, keyed by dir — the
-    * trained-artifact memo the literal oracle reads (the Similarity
-    * `trainedByDir` posture: Verify runs every query BEFORE dumping
-    * oracle_sql.json, so by then the fit for [[dirForOracles]] exists). */
-  private val svdByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Double]]
-  private val pcaByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[IndexedSeq[Double]]]
-  private val modesByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[IndexedSeq[Double]]]
-  private val qrByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[IndexedSeq[Double]]]
-  private val gramByDir =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-
-  /** The collected k × k Gram artifact of [[arrGram]], memoized per dir
-    * (the trained-model fingerprint posture: deterministic input →
+  /** The collected k × k Gram artifact of [[arrGram]], memoized (the
+    * trained-model fingerprint posture: deterministic input →
     * deterministic 64-double artifact) so the svd/pca/qr faces run ONE
     * Gram job between them instead of three. */
   private def gramMatrix(s: SparkSession, dir: String): Array[Array[Double]] =
-    gramByDir.getOrElseUpdate(dir, {
+    Memo.artifact(s, dir, "arr.gram", "events") {
       val n = geom2d.dimSize(1)
       val g = Array.ofDim[Double](n, n)
       arrGram(s, dir).collect().foreach { r =>
         g(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getDouble(2)
       }
       g
-    })
-  private val oracleDirRef =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastDirRef =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+    }
 
-  /** Pin which dir's computed spectrum [[oracles]] embeds (Verify sets
-    * its sfDir before dumping oracle_sql.json). */
-  def setOracleDir(dir: String): Unit = oracleDirRef.set(dir)
-
-  private def dirForOracles: Option[String] =
-    Option(oracleDirRef.get).orElse(Option(lastDirRef.get))
+  /** Forwarder to [[Memo.setOracleDir]], kept for the benchmark package,
+    * which calls it by this name. */
+  def setOracleDir(dir: String): Unit = Memo.setOracleDir(dir)
 
   /** `CAST('<shortest-roundtrip-repr>' AS DOUBLE)` — string->double
     * parsing is correctly-rounded in DuckDB, so the literal comes back
@@ -1643,20 +1554,20 @@ object ArrayQueries {
     * arr_gram's own exact oracle. */
   def oracles: Map[String, String] =
     staticOracles ++
-      dirForOracles.flatMap(svdByDir.get).map { sv =>
+      Memo.oracle[IndexedSeq[Double]]("arr.svd").map { sv =>
         val rows = sv.zipWithIndex
           .map { case (v, k) => s"(CAST($k AS BIGINT), ${fmtD(v)})" }
           .mkString(", ")
         Map("arr_svd_vals" ->
           s"SELECT k, sigma FROM (VALUES $rows) AS t(k, sigma) ORDER BY k")
       }.getOrElse(Map.empty) ++
-      dirForOracles.flatMap(pcaByDir.get).map { top =>
+      Memo.oracle[IndexedSeq[IndexedSeq[Double]]]("arr.pca").map { top =>
         Map("arr_pca_project" -> rowFoldOracleSql(top, "pc"))
       }.getOrElse(Map.empty) ++
-      dirForOracles.flatMap(modesByDir.get).map { w =>
+      Memo.oracle[IndexedSeq[IndexedSeq[Double]]]("arr.modes").map { w =>
         Map("arr_svd_modes" -> rowFoldOracleSql(w, "u"))
       }.getOrElse(Map.empty) ++
-      dirForOracles.flatMap(qrByDir.get).map { ru =>
+      Memo.oracle[IndexedSeq[IndexedSeq[Double]]]("arr.qr").map { ru =>
         val n = ru.length
         val rows = (for (i <- 0 until n; j <- i until n)
           yield s"(CAST($i AS BIGINT), CAST($j AS BIGINT), ${fmtD(ru(i)(j))})")
@@ -1664,7 +1575,7 @@ object ArrayQueries {
         Map("arr_qr_r" ->
           s"SELECT i, j, r_val FROM (VALUES $rows) AS t(i, j, r_val) ORDER BY i, j")
       }.getOrElse(Map.empty) ++
-      dirForOracles.flatMap(lstsqByDir.get).map { f =>
+      Memo.oracle[LstsqFit]("arr.lstsq").map { f =>
         val k = geom2d.dimSize(1)
         val terms = (f.beta.zipWithIndex.map { case (b, j) => (s"x$j", b) } :+
           (("intercept", f.icept)) :+ (("rss", f.rss)) :+ (("r2", f.r2)))

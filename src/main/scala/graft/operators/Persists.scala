@@ -14,9 +14,9 @@ import org.apache.spark.storage.StorageLevel
   * until BlockManager eviction, and nothing short of session stop could
   * release them. [[cached]] memoizes by (session, canonicalized plan):
   * repeated constructions return the FIRST persisted instance — so
-  * CacheManager reuse always hits the same entry — and [[release]] /
-  * [[releaseAll]] give rounds and suites an explicit teardown (the
-  * ArrayQueries.release posture). Hash buckets are verified with
+  * CacheManager reuse always hits the same entry — and [[release]]
+  * gives rounds and suites an explicit teardown (called by
+  * [[Memo.release]]). Hash buckets are verified with
   * `sameResult` before reuse, so a semanticHash collision can never
   * hand back a different relation; schemas are compared by field NAMES
   * too (canonicalization erases aliases, and a wrongly-aliased reuse
@@ -33,7 +33,7 @@ object Persists {
     val canon = df.queryExecution.logical.canonicalized
     val schema = df.schema.fieldNames.mkString(",")
     val key = (s, canon.semanticHash())
-    // synchronized like ArrayQueries.cached: persist is lazy metadata
+    // synchronized like Memo.relation: persist is lazy metadata
     // work (no job runs inside) and exactly one persist per plan wins
     reg.synchronized {
       if (reg.size > 512) {
@@ -42,7 +42,7 @@ object Persists {
           try d.unpersist(blocking = false) catch { case _: Throwable => () }
         }))
         // Never purge the CURRENT session's live entries here (ADVICE
-        // r16): a global releaseAll would strand callers holding
+        // r16): a global purge would strand callers holding
         // previously-returned instances on unpersisted plans while new
         // constructions persist fresh ones — the memo identity guarantee
         // (same entry ⇒ CacheManager reuse) silently degrading. Evict
@@ -86,14 +86,6 @@ object Persists {
     reg.keys.filter(_._1 == s).toSeq.foreach(k =>
       reg.remove(k).foreach(_.foreach { case (_, _, d) =>
         try d.unpersist(blocking = true) catch { case _: Throwable => () }
-      }))
-  }
-
-  /** Unpersist and forget every registered relation (suite teardown). */
-  def releaseAll(): Unit = reg.synchronized {
-    reg.keys.toSeq.foreach(k =>
-      reg.remove(k).foreach(_.foreach { case (_, _, d) =>
-        try d.unpersist(blocking = false) catch { case _: Throwable => () }
       }))
   }
 

@@ -555,36 +555,14 @@ object Pipeline {
     * corpus), span cuts and contamination join back by doc_id, and the
     * mix fracs are an O(#sources) broadcast. Nothing corpus-wide is
     * collected; every stage shuffles O(survivors) rows at most once. */
-  // Memoized per (session, dir) — the connected-components loop is a
-  // driver-side iteration CacheManager can never dedup (the ccLabels
-  // pattern), and three faces + the spec all read the same chain. The
-  // build runs OUTSIDE any lock (it executes jobs); a lost race
-  // recomputes once and leaks nothing. The FULL ccLabels freshness
-  // discipline applies: entries are keyed by the documents table's
-  // CONTENT fingerprint (an in-place refresh rebuilds instead of
-  // serving a mixed-vintage chain), stopped-session entries are
-  // evicted before a new insert (bench/probe session cycling can't
-  // pin dead sessions), and unfingerprintable content never memoizes.
-  private val e2eMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, E2eStages)]()
-
+  // Memoized per (session, dir) in the [[Memo]] registry — the
+  // connected-components loop is a driver-side iteration CacheManager
+  // can never dedup (the ccLabels pattern), and three faces + the spec
+  // all read the same chain. Keyed by the documents table's CONTENT
+  // fingerprint: an in-place refresh rebuilds instead of serving a
+  // mixed-vintage chain.
   private[graft] def e2eStages(s: SparkSession, dir: String): E2eStages =
-    Tables.fingerprint(s, dir, "documents") match {
-      case None => buildE2eStages(s, dir)
-      case Some(fp) =>
-        val k = (s, dir)
-        Option(e2eMemo.get(k)) match {
-          case Some((`fp`, hit)) => hit
-          case _ =>
-            val it = e2eMemo.keySet().iterator()
-            while (it.hasNext) {
-              if (it.next()._1.sparkContext.isStopped) it.remove()
-            }
-            val built = buildE2eStages(s, dir)
-            e2eMemo.put(k, (fp, built))
-            built
-        }
-    }
+    Memo.sessionArtifact(s, dir, "pipe.e2e", "documents")(buildE2eStages(s, dir))
 
   private def buildE2eStages(s: SparkSession, dir: String): E2eStages = {
     val W = org.apache.spark.sql.expressions.Window
@@ -798,49 +776,18 @@ object Pipeline {
   }
 
   /** Persisted `(doc_id, tk)` tokenized corpus, memoized per
-    * (session, dir) and keyed by the table's CONTENT fingerprint — the
-    * centroid-memo pattern ([[Similarity]]): a rewrite-in-place
-    * invalidates (the stale entry is unpersisted, not leaked), and an
-    * unfingerprintable table skips the memo rather than risking a stale
-    * hit. One entry per (session, dir) at any time, so repeated
-    * queries hold exactly one MEMORY_AND_DISK tokenize of the corpus —
-    * the relation every Pipeline text query shares. */
-  private val tokCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, DataFrame)]
-  private def tokenizedDocs(s: SparkSession, dir: String): DataFrame = {
-    def build() = Tables.load(s, dir, "documents")
-      .withColumn("tk",
-        org.apache.spark.sql.graftexpr.TextExpressions.wordNgrams(col("text"), 1))
-      .select("doc_id", "tk")
-    Tables.fingerprint(s, dir, "documents") match {
-      case None => build() // unverifiable content: no persist, no memo
-      case Some(fp) =>
-        // The memo update is SYNCHRONIZED: everything inside is lazy
-        // plan/metadata work (build+persist run no job), so the lock is
-        // cheap — and it closes the race where two first calls both
-        // persisted and the loser's copy leaked until the next purge.
-        tokCache.synchronized {
-          // Purge only entries whose session is STOPPED (the bench's
-          // restart-on-death path would otherwise pin dead sessions);
-          // live entries — including the one about to be served — stay.
-          // unpersist may throw against a stopped context; the entries
-          // must go regardless.
-          if (tokCache.size > 16)
-            tokCache.keys.toSeq.filter(_._1.sparkContext.isStopped).foreach(k =>
-              tokCache.remove(k).foreach { case (_, old) =>
-                try old.unpersist(blocking = false) catch { case _: Throwable => () }
-              })
-          tokCache.get((s, dir)) match {
-            case Some((`fp`, df)) => df
-            case stale =>
-              stale.foreach(_._2.unpersist(blocking = false))
-              val df = build().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              tokCache.update((s, dir), (fp, df))
-              df
-          }
-        }
+    * (session, dir) in the [[Memo]] registry and keyed by the table's
+    * CONTENT fingerprint: a rewrite-in-place invalidates (the stale entry
+    * is unpersisted, not leaked). Repeated queries hold exactly one
+    * MEMORY_AND_DISK tokenize of the corpus — the relation every Pipeline
+    * text query shares. */
+  private def tokenizedDocs(s: SparkSession, dir: String): DataFrame =
+    Memo.relation(s, dir, "pipe.tokens", "documents") {
+      Tables.load(s, dir, "documents")
+        .withColumn("tk",
+          org.apache.spark.sql.graftexpr.TextExpressions.wordNgrams(col("text"), 1))
+        .select("doc_id", "tk")
     }
-  }
 
   /** Vocabulary coverage (OOV-rate quality filter, CCNet-style but
     * log-free so it replays exactly cross-engine): fraction of each

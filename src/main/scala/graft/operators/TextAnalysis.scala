@@ -341,18 +341,12 @@ object TextAnalysis {
   val ClfSampleCap = 4096
   val ClfEpochs = 10
 
-  private val clfByDir =
-    scala.collection.concurrent.TrieMap.empty[String, (IndexedSeq[Long], Long)]
-  private val clfCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (String, (IndexedSeq[Long], Long))]
-
   /** Train (or serve the memoized fit of) the quality perceptron for
     * `dir`. Deterministic: the sample is doc_id-filtered and
     * doc_id-ordered, epochs visit it in that order, and all arithmetic
     * is integer — identical data yields identical weights. */
-  private[graft] def trainedClassifier(s: SparkSession, dir: String): (IndexedSeq[Long], Long) = {
-    def fit(): (IndexedSeq[Long], Long) = {
+  private[graft] def trainedClassifier(s: SparkSession, dir: String): (IndexedSeq[Long], Long) =
+    Memo.artifact(s, dir, "txt.clf", "documents") {
       val nTokD = size(col("tk")).cast("double")
       val stop = hitCount(col("tk"), STOP_EN).cast("double")
       val charSum = org.apache.spark.sql.graftexpr.TextExpressions.tokenCharSum(col("tk"))
@@ -390,23 +384,6 @@ object TextAnalysis {
       }
       (w.toIndexedSeq, b)
     }
-    // an unfingerprintable table trains fresh rather than risking a
-    // stale memo hit (the Similarity.trainedCentroids posture)
-    val model = Tables.fingerprint(s, dir, "documents") match {
-      case None => fit()
-      case Some(fp) =>
-        clfCache.get((s, dir)) match {
-          case Some((`fp`, m)) => m
-          case _ =>
-            val m = fit()
-            clfCache.update((s, dir), (fp, m))
-            m
-        }
-    }
-    clfByDir.update(dir, model)
-    lastDirRef.set(dir)
-    model
-  }
 
   /** The serving margin as a Column over the token-array column: one
     * exact integer fold per document (narrow, codegen'd hash). Shared
@@ -473,12 +450,6 @@ object TextAnalysis {
       unkQ: Long,
       backQ: Long)
 
-  private val lmByDir =
-    scala.collection.concurrent.TrieMap.empty[String, LmModel]
-  private val lmCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (String, LmModel)]
-
   /** Train (or serve the memoized fit of) the stupid-backoff bigram LM
     * for `dir` — the perplexity-style quality signal every modern
     * curation stack runs beside the classifier (CCNet scores documents
@@ -496,8 +467,8 @@ object TextAnalysis {
     * artifact: <= V + B count rows plus the contexts of the top
     * bigrams. The log quantization runs driver-side on exact count
     * ratios, so identical data yields identical literal tables. */
-  private[graft] def trainedLm(s: SparkSession, dir: String): LmModel = {
-    def fit(): LmModel = {
+  private[graft] def trainedLm(s: SparkSession, dir: String): LmModel =
+    Memo.artifact(s, dir, "txt.lm", "documents") {
       val toks = withTokens(s, dir)
         .filter(col("doc_id") % lit(LmSampleMod) === 0)
         .select(col("doc_id"), col("tk"))
@@ -543,23 +514,6 @@ object TextAnalysis {
         if (totalN > 0L) q(1L, 2L * totalN) else 0L,
         math.floor(1e6 * math.log(0.4)).toLong)
     }
-    // an unfingerprintable table trains fresh rather than risking a
-    // stale memo hit (the trainedClassifier posture)
-    val model = Tables.fingerprint(s, dir, "documents") match {
-      case None => fit()
-      case Some(fp) =>
-        lmCache.get((s, dir)) match {
-          case Some((`fp`, m)) => m
-          case _ =>
-            val m = fit()
-            lmCache.update((s, dir), (fp, m))
-            m
-        }
-    }
-    lmByDir.update(dir, model)
-    lastDirRef.set(dir)
-    model
-  }
 
   /** LM quality scoring (serving): per-document total and mean
     * quantized log-prob under the trained stupid-backoff bigram LM,
@@ -726,65 +680,16 @@ object TextAnalysis {
   private[operators] val BpeTokensSql =
     "list_filter(string_split(text, ' '), x -> len(x) > 0 AND NOT contains(x, '|'))"
 
-  /** Trained merge tables memoized per (session, dir) and keyed by the
-    * documents fingerprint — the [[graft.operators.Similarity]]
-    * trained-model posture: Verify/Bench passes reuse one training run
-    * instead of re-looping per query execution. LRU beyond cap 16 with
-    * stopped-session entries evicted first (the [[Dedup]] ccCache
-    * posture) so a long-lived session over many dirs stays bounded;
-    * entries are k-row merge tables, so recomputation is the only cost
-    * of an eviction. */
-  private val bpeCache = new java.util.LinkedHashMap[
-    (SparkSession, String), (String, Seq[(Long, String, String, Long)])](32, 0.75f, true)
-
-  /** Trained merge tables keyed BY DIR — read by [[oracles]] AFTER the
-    * queries have run (Verify's order) to embed the trained merges into
-    * the txt_bpe_encode/txt_bpe_freq oracle SQL (the
-    * [[Similarity.oracles]] trained-literal posture). */
-  private val mergesByDir =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, String, String, Long)]]
-  private val oracleDirRef =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastDirRef =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  /** Pin which dir's trained merges [[oracles]] embeds (Verify sets its
-    * sfDir before dumping oracle_sql.json). */
-  def setOracleDir(dir: String): Unit = oracleDirRef.set(dir)
-
-  private def dirForOracles: Option[String] =
-    Option(oracleDirRef.get).orElse(Option(lastDirRef.get))
+  /** Forwarder to [[Memo.setOracleDir]], kept for the benchmark package,
+    * which calls it by this name. */
+  def setOracleDir(dir: String): Unit = Memo.setOracleDir(dir)
 
   /** The memoized trained merge table for `dir` — trains on first use
     * (see [[trainBpe]]); every BPE face (vocab/encode/freq) and the
-    * oracle generator serve from the same fit. */
-  private[graft] def trainedMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
-    val merges = Tables.fingerprint(s, dir, "documents") match {
-      case None => trainBpe(s, dir) // unverifiable content: no memo
-      case Some(fp) =>
-        val key = (s, dir)
-        (bpeCache.synchronized {
-          if (bpeCache.size > 16) {
-            val dead = bpeCache.keySet.iterator
-            while (dead.hasNext) if (dead.next()._1.sparkContext.isStopped) dead.remove()
-          }
-          val lru = bpeCache.keySet.iterator
-          while (bpeCache.size > 16 && lru.hasNext) {
-            if (lru.next() != key) lru.remove()
-          }
-          Option(bpeCache.get(key))
-        }) match {
-          case Some((`fp`, m)) => m
-          case _ =>
-            val m = trainBpe(s, dir)
-            bpeCache.synchronized { bpeCache.put(key, (fp, m)): Unit }
-            m
-        }
-    }
-    mergesByDir.update(dir, merges)
-    lastDirRef.set(dir)
-    merges
-  }
+    * oracle generator serve from the same fit, and Verify/Bench passes
+    * reuse one training run instead of re-looping per execution. */
+  private[graft] def trainedMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
+    Memo.artifact(s, dir, "txt.bpe", "documents")(trainBpe(s, dir))
 
   /** The BPE pair-merge training loop (tokenizer training's core pass).
     *
@@ -1262,7 +1167,7 @@ object TextAnalysis {
     * oracles ([[Pipeline]]'s BPE-budgeted packing) — same
     * after-training contract as [[oracles]]. */
   private[operators] def oracleMerges: Option[Seq[(Long, String, String, Long)]] =
-    dirForOracles.flatMap(mergesByDir.get)
+    Memo.oracle[Seq[(Long, String, String, Long)]]("txt.bpe")
 
   /** Oracle-side twin of [[bpeDocCounts]]'s `(doc_id, n_bpe)` face, for
     * composition into sibling operators' generated SQL: per-doc BPE
@@ -1419,25 +1324,11 @@ object TextAnalysis {
     vocab.map(p => SpPiece(p, probs(p), math.floor(1e6 * math.log(probs(p))).toLong))
   }
 
-  /** Trained unigram models, memoized like [[bpeCache]]; the per-dir
-    * maps feed the trained-literal oracles. `spWordsByDir` additionally
-    * carries the driver Viterbi segmentation of every collected word
-    * TYPE — the bounded artifact the encode oracle joins against (total
-    * over the test corpora; capped at [[BpeMaxTrainTypes]] like
-    * training itself, a declared precondition of the oracle replay —
-    * SERVING has no such bound, the kernel segments any word live). */
-  private val spCache = new java.util.LinkedHashMap[
-    (SparkSession, String), (String, Seq[SpPiece])](32, 0.75f, true)
-  private val spByDir =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[SpPiece]]
-  private val spWordsByDir =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, Long, Long, String)]]
-
   /** The trained word-type segmentation artifact available to SIBLING
     * operators' generated oracles ([[Pipeline]]'s sp-budgeted packing)
     * — same after-training contract as [[oracles]]. */
   private[operators] def oracleSpWords: Option[Seq[(String, Long, Long, String)]] =
-    dirForOracles.flatMap(spWordsByDir.get)
+    Memo.oracle[Seq[(String, Long, Long, String)]]("txt.sp_words")
 
   private def spModelMap(m: Seq[SpPiece]): java.util.HashMap[String, java.lang.Long] = {
     val h = new java.util.HashMap[String, java.lang.Long](m.size * 2)
@@ -1445,97 +1336,65 @@ object TextAnalysis {
     h
   }
 
+  /** The memoized trained unigram model; training it also memoizes
+    * [[spWords]], the artifact its encode/freq oracles embed. */
   private[graft] def trainedSp(s: SparkSession, dir: String): Seq[SpPiece] = {
-    def fit(): Seq[SpPiece] = trainUnigram(spTrainTypes(s, dir))
-    val m = Tables.fingerprint(s, dir, "documents") match {
-      case None => fit() // unverifiable content: no memo
-      case Some(fp) =>
-        val key = (s, dir)
-        (spCache.synchronized {
-          if (spCache.size > 16) {
-            val dead = spCache.keySet.iterator
-            while (dead.hasNext) if (dead.next()._1.sparkContext.isStopped) dead.remove()
-          }
-          val lru = spCache.keySet.iterator
-          while (spCache.size > 16 && lru.hasNext) {
-            if (lru.next() != key) lru.remove()
-          }
-          Option(spCache.get(key))
-        }) match {
-          case Some((`fp`, mm)) => mm
-          case _ =>
-            val mm = fit()
-            spCache.synchronized { spCache.put(key, (fp, mm)): Unit }
-            mm
-        }
-    }
-    spByDir.update(dir, m)
-    // the encode/freq-oracle artifact: driver Viterbi over the word
-    // types through the SAME spSegment/spPiecesEval the kernels call
-    val h = spModelMap(m)
-    val trainTypes = spTrainTypes(s, dir)
-    // The oracle replay INNER-joins document words against this table;
-    // serving segments every word live. If the corpus has more distinct
-    // word types than the training cap, the joins would silently drop
-    // the uncapped tail from ALL oracle counts — fail loudly instead of
-    // emitting a diverging oracle (the cap is a training bound, never a
-    // correctness bound).
-    require(trainTypes.size < BpeMaxTrainTypes,
-      s"sp oracle replay precondition violated: corpus distinct word-type " +
-        s"count reached the BpeMaxTrainTypes cap ($BpeMaxTrainTypes); the " +
-        s"capped type table cannot replay serving-side segmentation of " +
-        s"out-of-table words — refusing to emit txt_sp_encode/txt_sp_freq " +
-        s"oracles for $dir")
-    spWordsByDir.update(dir, trainTypes.map { case (w, _) =>
-      val r = org.apache.spark.sql.graftexpr.TextExpressions
-        .spSegment(w, h, SpMaxPieceLen, SpUnkQ)
-      val ps = org.apache.spark.sql.graftexpr.TextExpressions.spPiecesEval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(w), h, SpMaxPieceLen, SpUnkQ)
-      // pieces are substrings of a whitespace token — space-free by
-      // construction, so a space join round-trips through string_split
-      val pcs = (0 until ps.numElements())
-        .map(i => ps.getUTF8String(i).toString).mkString(" ")
-      (w, r(0), r(1), pcs)
-    })
-    lastDirRef.set(dir)
+    val m = Memo.artifact(s, dir, "txt.sp", "documents")(trainUnigram(spTrainTypes(s, dir)))
+    spWords(s, dir, m)
     m
   }
+
+  /** The driver Viterbi segmentation of every collected word TYPE under
+    * model `m`, through the SAME spSegment/spPiecesEval the kernels call
+    * — the bounded artifact the encode oracle joins against (total over
+    * the test corpora; capped at [[BpeMaxTrainTypes]] like training
+    * itself, a declared precondition of the oracle replay — SERVING has
+    * no such bound, the kernel segments any word live). */
+  private def spWords(s: SparkSession, dir: String,
+      m: Seq[SpPiece]): Seq[(String, Long, Long, String)] =
+    Memo.artifact(s, dir, "txt.sp_words", "documents") {
+      val h = spModelMap(m)
+      val trainTypes = spTrainTypes(s, dir)
+      // The oracle replay INNER-joins document words against this table;
+      // serving segments every word live. If the corpus has more distinct
+      // word types than the training cap, the joins would silently drop
+      // the uncapped tail from ALL oracle counts — fail loudly instead of
+      // emitting a diverging oracle (the cap is a training bound, never a
+      // correctness bound).
+      require(trainTypes.size < BpeMaxTrainTypes,
+        s"sp oracle replay precondition violated: corpus distinct word-type " +
+          s"count reached the BpeMaxTrainTypes cap ($BpeMaxTrainTypes); the " +
+          s"capped type table cannot replay serving-side segmentation of " +
+          s"out-of-table words — refusing to emit txt_sp_encode/txt_sp_freq " +
+          s"oracles for $dir")
+      trainTypes.map { case (w, _) =>
+        val r = org.apache.spark.sql.graftexpr.TextExpressions
+          .spSegment(w, h, SpMaxPieceLen, SpUnkQ)
+        val ps = org.apache.spark.sql.graftexpr.TextExpressions.spPiecesEval(
+          org.apache.spark.unsafe.types.UTF8String.fromString(w), h, SpMaxPieceLen, SpUnkQ)
+        // pieces are substrings of a whitespace token — space-free by
+        // construction, so a space join round-trips through string_split
+        val pcs = (0 until ps.numElements())
+          .map(i => ps.getUTF8String(i).toString).mkString(" ")
+        (w, r(0), r(1), pcs)
+      }
+    }
 
   /** The one distributed pass of unigram training: the word-type
     * frequency table over the PLAIN whitespace tokens (no '|' carve-out
     * — unigram needs no delimiter encoding), top-[[BpeMaxTrainTypes]]
-    * by (count, word). Memoized per (session, dir, fingerprint) via the
-    * same collect the driver trainer reads. */
-  private val spTypesCache = new java.util.LinkedHashMap[
-    (SparkSession, String), (String, Seq[(String, Long)])](32, 0.75f, true)
-  private def spTrainTypes(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    def run(): Seq[(String, Long)] = Tables.load(s, dir, "documents")
-      .select(explode(org.apache.spark.sql.graftexpr.TextExpressions
-        .wordNgrams(col("text"), 1)).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("w").asc)
-      .limit(BpeMaxTrainTypes)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    Tables.fingerprint(s, dir, "documents") match {
-      case None => run()
-      case Some(fp) =>
-        val key = (s, dir)
-        (spTypesCache.synchronized {
-          val lru = spTypesCache.keySet.iterator
-          while (spTypesCache.size > 16 && lru.hasNext) {
-            if (lru.next() != key) lru.remove()
-          }
-          Option(spTypesCache.get(key))
-        }) match {
-          case Some((`fp`, t)) => t
-          case _ =>
-            val t = run()
-            spTypesCache.synchronized { spTypesCache.put(key, (fp, t)): Unit }
-            t
-        }
+    * by (count, word), memoized as the collect the driver trainer reads. */
+  private def spTrainTypes(s: SparkSession, dir: String): Seq[(String, Long)] =
+    Memo.artifact(s, dir, "txt.sp_types", "documents") {
+      Tables.load(s, dir, "documents")
+        .select(explode(org.apache.spark.sql.graftexpr.TextExpressions
+          .wordNgrams(col("text"), 1)).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("w").asc)
+        .limit(BpeMaxTrainTypes)
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
     }
-  }
 
   /** The TRAINED unigram piece table (piece, micro-nat score) — the
     * model artifact a serving stack ships (txt_bpe_vocab's sibling for
@@ -1668,19 +1527,19 @@ object TextAnalysis {
   }
 
   def oracles: Map[String, String] = staticOracles ++
-    dirForOracles.flatMap(spByDir.get).map { m =>
+    Memo.oracle[Seq[SpPiece]]("txt.sp").map { m =>
       Map("txt_sp_unigram" -> spUnigramSql(m))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(spWordsByDir.get).map { ws =>
+    Memo.oracle[Seq[(String, Long, Long, String)]]("txt.sp_words").map { ws =>
       Map("txt_sp_encode" -> spEncodeSql(ws), "txt_sp_freq" -> spFreqSql(ws))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(mergesByDir.get).map { m =>
+    Memo.oracle[Seq[(Long, String, String, Long)]]("txt.bpe").map { m =>
       Map("txt_bpe_encode" -> bpeEncodeSql(m), "txt_bpe_freq" -> bpeFreqSql(m))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(clfByDir.get).map { case (w, b) =>
+    Memo.oracle[(IndexedSeq[Long], Long)]("txt.clf").map { case (w, b) =>
       Map("txt_classifier_score" -> clfScoreSql(w, b))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(lmByDir.get).map { m =>
+    Memo.oracle[LmModel]("txt.lm").map { m =>
       Map("txt_lm_score" -> lmScoreSql(m))
     }.getOrElse(Map.empty)
 

@@ -23,10 +23,13 @@ object Tables {
   /** Drop all memoized frames (e.g. after replacing a dead session). */
   def clearCache(): Unit = cache.clear()
 
+  /** Where table `name` of `dir` lives. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (cache.size > 256) cache.clear()
-    cache.getOrElseUpdate((spark, s"$dir/$name.parquet"), {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+    cache.getOrElseUpdate((spark, path(dir, name)), {
+      val df = spark.read.parquet(path(dir, name))
       // events.ts has shipped as TIMESTAMP(NANOS) — which Spark only reads
       // as a long (spark.sql.legacy.parquet.nanosAsLong=true, set in our
       // session builders) — and as TIMESTAMP(MICROS, isAdjustedToUTC=false),
@@ -65,7 +68,7 @@ object Tables {
     try {
       // inside the try: a malformed dir makes the Path CONSTRUCTOR throw
       // (IllegalArgumentException), which must also degrade to None
-      val root = new Path(s"$dir/$name.parquet")
+      val root = new Path(path(dir, name))
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def walk(st: FileStatus): Seq[FileStatus] =
         if (st.isDirectory)

@@ -739,7 +739,7 @@ class ChunkedArraySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("release unpersists memoized chunk relations (memory release contract)") {
-    import graft.operators.ArrayQueries
+    import graft.operators.{ArrayQueries, Memo}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     // the memo hands out frames re-rooted at the cache entry's
     // InMemoryRelation; its builder holds the persisted column buffers
@@ -754,14 +754,14 @@ class ChunkedArraySpec extends AnyFunSuite with BeforeAndAfterAll {
     val arr = request()
     arr.df.count()
     assert(builderOf(arr).isCachedColumnBuffersLoaded)
-    ArrayQueries.release(spark)
+    Memo.release(spark)
     assert(!builderOf(arr).isCachedColumnBuffersLoaded, "release must drop the blocks")
     // next request rebuilds and re-persists, then clean up again
     val arr2 = request()
     assert(!(builderOf(arr2) eq builderOf(arr)))
     arr2.df.count()
     assert(builderOf(arr2).isCachedColumnBuffersLoaded)
-    ArrayQueries.release(spark)
+    Memo.release(spark)
   }
 
   /** Flatten to (timestep, global coords) -> value with independent

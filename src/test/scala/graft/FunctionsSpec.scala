@@ -448,24 +448,25 @@ class FunctionsSpec extends AnyFunSuite {
       s"centroid assignment must not cross-join:\n$plan")
   }
 
-  test("similarity: embFingerprint uses the Hadoop FS and survives missing dirs") {
+  test("similarity: Tables.fingerprint uses the Hadoop FS and survives missing dirs") {
+    import graft.sources.Tables
     // a real table fingerprints; a missing one is None (no NPE), so the
     // trained path falls back to a fresh fit instead of a stale memo
-    val fp = Similarity.embFingerprint(spark, sf)
+    val fp = Tables.fingerprint(spark, sf, "embeddings")
     assert(fp.exists(_.nonEmpty))
-    assert(Similarity.embFingerprint(spark, "/tmp/graft_no_such_dir").isEmpty)
+    assert(Tables.fingerprint(spark, "/tmp/graft_no_such_dir", "embeddings").isEmpty)
     // a malformed path (invalid URI scheme) degrades to None too, not a
     // thrown IllegalArgumentException (cannot-prove-freshness contract)
-    assert(Similarity.embFingerprint(spark, "::bad uri::").isEmpty)
+    assert(Tables.fingerprint(spark, "::bad uri::", "embeddings").isEmpty)
     // rewriting a file in place changes the fingerprint (size or mtime)
     val tmp = java.nio.file.Files.createTempDirectory("graft_fp").toString
     val tbl = java.nio.file.Paths.get(tmp, "embeddings.parquet")
     java.nio.file.Files.createDirectory(tbl)
     val part = tbl.resolve("part-0")
     java.nio.file.Files.writeString(part, "aa")
-    val before = Similarity.embFingerprint(spark, tmp)
+    val before = Tables.fingerprint(spark, tmp, "embeddings")
     java.nio.file.Files.writeString(part, "abcd")
-    val after = Similarity.embFingerprint(spark, tmp)
+    val after = Tables.fingerprint(spark, tmp, "embeddings")
     assert(before.exists(_.nonEmpty) && after.exists(_.nonEmpty) && before != after)
   }
 
@@ -554,14 +555,14 @@ class FunctionsSpec extends AnyFunSuite {
         graft.sources.Tables.load(spark, dir, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),
         Similarity.NumCentroids, iters = 3)
-      Similarity.setOracleDir(dirA)
+      graft.operators.Memo.setOracleDir(dirA)
       val sqlA = Similarity.oracles("sim_ivf_trained")
-      Similarity.setOracleDir(dirB)
+      graft.operators.Memo.setOracleDir(dirB)
       val sqlB = Similarity.oracles("sim_ivf_trained")
       assert(sqlA != sqlB, "each dir's oracle must embed its own fit")
       assert(sqlA.contains(java.lang.Double.toString(fitOf(dirA).head.head)))
       assert(sqlB.contains(java.lang.Double.toString(fitOf(dirB).head.head)))
-    } finally Similarity.setOracleDir(null)
+    } finally graft.operators.Memo.setOracleDir(null)
   }
 
   test("similarity: PQ ANN scores through the bounded heap and stays sane") {

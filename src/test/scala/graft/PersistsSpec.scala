@@ -55,6 +55,6 @@ class PersistsSpec extends AnyFunSuite {
     val again = key()
     val b = Persists.cached(again)
     assert(!(leafOf(a) eq leafOf(b)) && again.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    Persists.releaseAll()
+    Persists.release(spark)
   }
 }
