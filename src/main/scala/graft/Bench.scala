@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * investigation; isolated re-runs showed 4-7x lower). min-of-2 reports
   * the query's own marginal cost, which is the comparable number. */
 object Bench {
-  /** The measurement session — ONE spelling shared with ScaleProbe so
-    * probe numbers are always taken under the same config as the bench
-    * numbers they're compared against. */
+  /** The measurement session — ONE spelling shared with ScaleProbe,
+    * Verify, the plan dumps and perfbench, so probe numbers, oracle
+    * results and plans are always taken under the same config as the
+    * bench numbers they're compared against. */
   private[graft] def measurementSession(cpus: String,
       shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()

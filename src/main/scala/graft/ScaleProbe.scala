@@ -69,11 +69,6 @@ object ScaleProbe {
     "arr_fft" -> 100,
     "txt_quality" -> 100)
 
-  /** Delegates to [[Bench.measurementSession]] — probe numbers must be
-    * taken under the exact session config the bench uses. */
-  private def newSession(cpus: String, shufflePartitions: Int): SparkSession =
-    Bench.measurementSession(cpus, shufflePartitions)
-
   /** Salt every 4th word with a replica-unique token (see object doc). */
   private def saltedText(text: org.apache.spark.sql.Column,
       rep: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -179,7 +174,7 @@ object ScaleProbe {
         case None => DefaultQueries
       }
 
-    var spark = newSession(cpus, cpus.toInt)
+    var spark = Bench.measurementSession(cpus, cpus.toInt)
     // materialize every factor's corpus first (resumable)
     for (f <- factors) {
       val dir = s"$outBase/x$f"
@@ -208,7 +203,7 @@ object ScaleProbe {
         // runs (is a super-linear leg partition sizing or the plan?)
         val width = sys.env.get("SPARK_GRAFT_SCALE_SHUFFLE").map(_.toInt)
           .getOrElse(math.max(cpus.toInt, cpus.toInt * f / 10))
-        spark = newSession(cpus, width)
+        spark = Bench.measurementSession(cpus, width)
       }
       restart()
       // SPARK_GRAFT_SCALE_PASSES=1 measures the COLD cost instead of

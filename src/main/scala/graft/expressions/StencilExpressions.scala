@@ -177,7 +177,8 @@ case class StencilConvolve(
 }
 
 /** Native kernel for the (2N+1)-point Laplacian fold
-  * ([[graft.arrays.ChunkedArray.stencilLaplacian]]'s output projection).
+  * ([[graft.arrays.ChunkedArray.stencilLaplacian]]'s output projection,
+  * and [[graft.streaming.HaloStencil]]'s).
   *
   * The Laplacian's fold is NOT a row-major dense-kernel fold —
   * `2N·c − (((lo_0 + hi_0) + lo_1) + hi_1 ...)` associates differently

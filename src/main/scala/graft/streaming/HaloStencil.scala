@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graftexpr.StencilExpressions
 
 import graft.arrays.ArrayGeometry
 
@@ -10,6 +10,11 @@ import graft.arrays.ArrayGeometry
 case class HaloChunk(name: String, timestep: Long, pos: Seq[Int], data: Seq[Double])
 
 private case class HaloState(strips: Map[String, Seq[Double]], done: Boolean)
+
+/** A completed neighborhood: the position's own payload ("c") and its
+  * in-grid neighbors' faces ("l$d"/"h$d"), the batch stencil's message
+  * map. */
+private case class HaloHood(name: String, timestep: Long, pos: Seq[Int], strips: Map[String, Seq[Double]])
 
 /** Streaming (2N+1)-point Laplacian WITHOUT assembling full timesteps —
   * the incremental form of [[graft.arrays.ChunkedArray.stencilLaplacian]]
@@ -25,15 +30,17 @@ private case class HaloState(strips: Map[String, Seq[Double]], done: Boolean)
   * flight. Compare [[Simulation.runArrayOp]] + batch stencil, which
   * waits for ALL chunks of a timestep before any output.
   *
+  * A completed neighborhood goes through the batch stencil's own native
+  * Laplacian kernel, so each streamed chunk is bit-equal to the batch
+  * chunk at that position.
+  *
   * Contract: the array is dense (every in-grid position's chunk arrives
   * eventually — the same density [[graft.operators.ArrayQueries]]
   * guarantees by zero-filling); global-boundary halos are zero.
   * Duplicate messages from at-least-once replays are deduped by kind,
   * and a completed position ignores further input. State per key is the
-  * buffered strips, freed on emission (the done marker remains;
-  * long-running streams should expire it with a processing-time TTL as
-  * in [[Simulation.assembleChunks]] — kept NoTimeout here because the
-  * spec suite drives finite streams).
+  * buffered strips, freed on emission; the done marker remains, with no
+  * [[KeyedState]] idle TTL (the spec suite drives finite streams).
   */
 object HaloStencil {
 
@@ -68,26 +75,7 @@ object HaloStencil {
       1 + (0 until n).map(d =>
         (if (p(d) > 0) 1 else 0) + (if (p(d) < chunksPerDim(d) - 1) 1 else 0)).sum
 
-    def laplacian(strips: Map[String, Seq[Double]]): Seq[Double] = {
-      val self = strips("c")
-      (0 until elems).map { idx =>
-        val neighborSum = (0 until n).map { d =>
-          val cd = idx / strides(d) % shape(d)
-          val slabI = remWithSlabStrides(d)
-            .foldLeft(0) { case (acc, (j, ss)) => acc + (idx / strides(j) % shape(j)) * ss }
-          val lo =
-            if (cd > 0) self(idx - strides(d))
-            else strips.get(s"l$d").map(_(slabI)).getOrElse(0.0)
-          val hi =
-            if (cd < shape(d) - 1) self(idx + strides(d))
-            else strips.get(s"h$d").map(_(slabI)).getOrElse(0.0)
-          lo + hi
-        }.sum
-        2 * n * self(idx) - neighborSum
-      }
-    }
-
-    chunks.select(col("name"), col("timestep"), col("pos"), col("data"))
+    val neighborhoods = chunks.select(col("name"), col("timestep"), col("pos"), col("data"))
       .as[(String, Long, Seq[Int], Seq[Double])]
       .flatMap { case (name, t, pos, data) =>
         require(data.length == elems,
@@ -103,24 +91,24 @@ object HaloStencil {
         self +: halos
       }
       .groupByKey { case (name, t, pos, _, _) => (name, t, pos) }
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: (String, Long, Seq[Int]),
-         it: Iterator[(String, Long, Seq[Int], String, Seq[Double])],
-         state: GroupState[HaloState]) => {
-          val (name, t, pos) = key
-          var st = state.getOption.getOrElse(HaloState(Map.empty, done = false))
-          val out = scala.collection.mutable.ArrayBuffer.empty[HaloChunk]
-          it.foreach { case (_, _, _, kind, strip) =>
-            if (!st.done && !st.strips.contains(kind)) {
-              val strips = st.strips + (kind -> strip)
-              st = if (strips.size >= expectedMsgs(pos)) {
-                out += HaloChunk(name, t, pos, laplacian(strips))
-                HaloState(Map.empty, done = true) // strips freed
-              } else st.copy(strips = strips)
-            }
+    KeyedState.fold(neighborhoods, HaloState(Map.empty, done = false), idleTtlMs = 0L) {
+      (key: (String, Long, Seq[Int]), it: Iterator[(String, Long, Seq[Int], String, Seq[Double])],
+       st0: HaloState) =>
+        val (name, t, pos) = key
+        var st = st0
+        val out = scala.collection.mutable.ArrayBuffer.empty[HaloHood]
+        it.foreach { case (_, _, _, kind, strip) =>
+          if (!st.done && !st.strips.contains(kind)) {
+            val strips = st.strips + (kind -> strip)
+            st = if (strips.size >= expectedMsgs(pos)) {
+              out += HaloHood(name, t, pos, strips)
+              HaloState(Map.empty, done = true) // strips freed
+            } else st.copy(strips = strips)
           }
-          state.update(st)
-          out.iterator
-        })
+        }
+        (st, out.iterator)
+    }.select(col("name"), col("timestep"), col("pos"),
+      StencilExpressions.stencilLaplacian(col("strips"), col("pos"), shape, chunksPerDim).as("data"))
+      .as[HaloChunk]
   }
 }

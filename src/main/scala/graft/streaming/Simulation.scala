@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.arrays.ChunkedArray
 
@@ -99,59 +99,41 @@ object Simulation {
     * dropped, so at-least-once sources cannot re-open a timestep. State
     * per array name is O(in-flight + horizon) scalars.
     *
-    * `idleTtlMs > 0` expires an array's WHOLE state (stuck partials from
-    * a dead producer AND the completed-marker horizon) that long after
-    * its last message, via a processing-time timeout — the
-    * [[assembleChunks]] TTL contract, here keyed per array name: without
-    * it, a timestep that never completes pins its partial entry forever.
-    * Same tradeoffs as there: choose the TTL longer than both the
-    * producers' stall ceiling and the source's replay horizon (a replay
-    * after expiry re-opens and re-emits its timestep), and pair it with
-    * an explicit trigger interval (processing-time timeouts schedule
-    * no-data batches; the default ASAP trigger would busy-loop). */
+    * `idleTtlMs` is the [[KeyedState]] idle TTL, keyed per array name:
+    * without it, a timestep that never completes pins its partial entry
+    * forever. */
   def assemble(msgs: Dataset[ChunkMsg], idleTtlMs: Long = 0L): Dataset[TimestepTotal] = {
     import msgs.sparkSession.implicits._
-    val timeout =
-      if (idleTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    msgs.groupByKey(_.name)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (name: String, it: Iterator[ChunkMsg], state: GroupState[AsmState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-          var st = state.getOption.getOrElse(AsmState(Map.empty, Map.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TimestepTotal]
-          // deltas for timesteps whose predecessor completes later in the
-          // batch are resolved after the loop
-          val pendingDelta = scala.collection.mutable.ArrayBuffer.empty[Int]
-          it.foreach { m =>
-            if (!st.completed.contains(m.timestep)) {
-              val (s0, c0) = st.partial.getOrElse(m.timestep, (0.0, 0))
-              val (s1, c1) = (s0 + m.chunkSum, c0 + 1)
-              if (c1 >= m.nbChunks) {
-                val done = st.completed + (m.timestep -> s1)
-                st = AsmState(
-                  st.partial - m.timestep,
-                  done.filter { case (t, _) => t >= m.timestep - AsmState.Horizon })
-                val delta = st.completed.get(m.timestep - 1).map(s1 - _)
-                if (delta.isEmpty) pendingDelta += out.size
-                out += TimestepTotal(name, m.timestep, s1, delta)
-              } else {
-                st = st.copy(partial = st.partial + (m.timestep -> (s1, c1)))
-              }
+    KeyedState.fold(msgs.groupByKey(_.name), AsmState(Map.empty, Map.empty), idleTtlMs) {
+      (name: String, it: Iterator[ChunkMsg], st0: AsmState) =>
+        var st = st0
+        val out = scala.collection.mutable.ArrayBuffer.empty[TimestepTotal]
+        // deltas for timesteps whose predecessor completes later in the
+        // batch are resolved after the loop
+        val pendingDelta = scala.collection.mutable.ArrayBuffer.empty[Int]
+        it.foreach { m =>
+          if (!st.completed.contains(m.timestep)) {
+            val (s0, c0) = st.partial.getOrElse(m.timestep, (0.0, 0))
+            val (s1, c1) = (s0 + m.chunkSum, c0 + 1)
+            if (c1 >= m.nbChunks) {
+              val done = st.completed + (m.timestep -> s1)
+              st = AsmState(
+                st.partial - m.timestep,
+                done.filter { case (t, _) => t >= m.timestep - AsmState.Horizon })
+              val delta = st.completed.get(m.timestep - 1).map(s1 - _)
+              if (delta.isEmpty) pendingDelta += out.size
+              out += TimestepTotal(name, m.timestep, s1, delta)
+            } else {
+              st = st.copy(partial = st.partial + (m.timestep -> (s1, c1)))
             }
           }
-          pendingDelta.foreach { i =>
-            val t = out(i)
-            out(i) = t.copy(delta = st.completed.get(t.timestep - 1).map(t.total - _))
-          }
-          state.update(st)
-          if (idleTtlMs > 0) state.setTimeoutDuration(idleTtlMs)
-          out.iterator
-          }
-        })
+        }
+        pendingDelta.foreach { i =>
+          val t = out(i)
+          out(i) = t.copy(delta = st.completed.get(t.timestep - 1).map(t.total - _))
+        }
+        (st, out.iterator)
+    }
   }
 
   /** Assemble timesteps and emit each with its trailing `window_size`
@@ -159,8 +141,9 @@ object Simulation {
     * (doreisa/window_api.py:88-97): delivery is strictly in timestep
     * order per array (the reference's iteration loop blocks until every
     * array of iteration t has arrived), each emission carries the totals
-    * of [max(t-k+1, start), t] oldest -> newest, and window sizes are
-    * per-array (mixed sizes across names, tests/test_several_arrays.py).
+    * of [max(t-k+1, start), t] oldest -> newest ([[KeyedState.drain]]),
+    * and window sizes are per-array (mixed sizes across names,
+    * tests/test_several_arrays.py).
     *
     * Out-of-order completions buffer until the gap fills; a permanently
     * missing timestep stalls that array's emission exactly as the
@@ -170,12 +153,9 @@ object Simulation {
     * analog). Chunks below the emission watermark are dropped, so
     * at-least-once replays cannot re-open an emitted timestep.
     *
-    * `idleTtlMs > 0` expires an array's WHOLE state (stuck partials,
-    * buffered completions AND the emission watermark) that long after
-    * its last message — the [[assemble]] TTL contract; note the
-    * watermark resets to `start` with the rest of the state, so a
-    * post-expiry replay re-emits from the replayed timestep on. Pair a
-    * TTL with an explicit trigger interval (see [[assembleChunks]]). */
+    * `idleTtlMs` is the [[KeyedState]] idle TTL, keyed per array name;
+    * the emission watermark expires with the rest of the state, so a
+    * post-expiry replay re-emits from the replayed timestep on. */
   def assembleWindows(
       msgs: Dataset[ChunkMsg],
       defs: Seq[ArrayDef],
@@ -184,46 +164,41 @@ object Simulation {
     import msgs.sparkSession.implicits._
     val winSize = defs.map(d => d.name -> d.windowSize).toMap
     require(winSize.values.forall(_ >= 1), "windowSize must be >= 1")
-    val timeout =
-      if (idleTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    msgs.groupByKey(_.name)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (name: String, it: Iterator[ChunkMsg], state: GroupState[WinAsmState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-          val k = winSize.getOrElse(name, 1)
-          var st = state.getOption.getOrElse(WinAsmState(Map.empty, Map.empty, start))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TimestepWindow]
-          it.foreach { m =>
-            // below the watermark = already emitted (or a pre-start replay)
-            if (m.timestep >= st.nextEmit && !st.completed.contains(m.timestep)) {
-              val (s0, c0) = st.partial.getOrElse(m.timestep, (0.0, 0))
-              val (s1, c1) = (s0 + m.chunkSum, c0 + 1)
-              st = if (c1 >= m.nbChunks) {
-                WinAsmState(st.partial - m.timestep, st.completed + (m.timestep -> s1), st.nextEmit)
-              } else {
-                st.copy(partial = st.partial + (m.timestep -> (s1, c1)))
-              }
+    KeyedState.fold(msgs.groupByKey(_.name), WinAsmState(Map.empty, Map.empty, start), idleTtlMs) {
+      (name: String, it: Iterator[ChunkMsg], st0: WinAsmState) =>
+        var st = st0
+        it.foreach { m =>
+          // below the watermark = already emitted (or a pre-start replay)
+          if (m.timestep >= st.nextEmit && !st.completed.contains(m.timestep)) {
+            val (s0, c0) = st.partial.getOrElse(m.timestep, (0.0, 0))
+            val (s1, c1) = (s0 + m.chunkSum, c0 + 1)
+            st = if (c1 >= m.nbChunks) {
+              WinAsmState(st.partial - m.timestep, st.completed + (m.timestep -> s1), st.nextEmit)
+            } else {
+              st.copy(partial = st.partial + (m.timestep -> (s1, c1)))
             }
           }
-          // drain every consecutive completed timestep from the watermark
-          while (st.completed.contains(st.nextEmit)) {
-            val t = st.nextEmit
-            out += TimestepWindow(name, t,
-              (math.max(t - k + 1, start) to t).map(st.completed))
-            // totals older than the oldest slot of t+1's window are done
-            st = WinAsmState(st.partial,
-              st.completed.filter { case (t0, _) => t0 >= t + 2 - k }, t + 1)
-          }
-          state.update(st)
-          if (idleTtlMs > 0) state.setTimeoutDuration(idleTtlMs)
-          out.iterator
-          }
-        })
+        }
+        val (completed, nextEmit, wins) =
+          KeyedState.drain(st.completed, st.nextEmit, winSize.getOrElse(name, 1), start)
+        (WinAsmState(st.partial, completed, nextEmit),
+          wins.iterator.map { case (t, w) => TimestepWindow(name, t, w) })
+    }
   }
+
+  /** The one delivery spelling of the `run*` loops: start `rows` as an
+    * Append-mode query whose micro-batches go to `onBatch`. */
+  private def deliver[T](rows: Dataset[T], trigger: Trigger)(
+      onBatch: (Dataset[T], Long) => Unit): StreamingQuery =
+    rows.writeStream.outputMode(OutputMode.Append()).trigger(trigger).foreachBatch(onBatch).start()
+
+  /** [[deliver]] with the in-order callback tail: each micro-batch's
+    * per-timestep rows are collected and handed to `each` sorted by
+    * (name, timestep). Collected rows are per-timestep scalars
+    * (O(#timesteps * k) per batch), never chunk payloads. */
+  private def deliverInOrder[T](rows: Dataset[T], trigger: Trigger)(
+      key: T => (String, Long))(each: T => Unit): StreamingQuery =
+    deliver(rows, trigger)((batch, _) => batch.collect().sortBy(key).foreach(each))
 
   /** Run the per-timestep callback loop (doreisa `run_simulation`):
     * completed timesteps stream into `onTimestep`. */
@@ -231,36 +206,21 @@ object Simulation {
       chunks: DataFrame,
       defs: Seq[ArrayDef],
       onTimestep: (String, Long, Double, Option[Double]) => Unit,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
-    assemble(toMessages(chunks, defs)).writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[TimestepTotal], _: Long) =>
-        batch.collect().sortBy(t => (t.name, t.timestep))
-          .foreach(t => onTimestep(t.name, t.timestep, t.total, t.delta))
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+    deliverInOrder(assemble(toMessages(chunks, defs)), trigger)(t => (t.name, t.timestep)) { t =>
+      onTimestep(t.name, t.timestep, t.total, t.delta)
+    }
 
   /** `run` with the general windowed contract: `onTimestep(name, t,
     * window)` receives the last `ArrayDef.windowSize` completed totals
-    * (oldest -> newest), strictly in timestep order per array. Collected
-    * rows are per-timestep scalars (O(#timesteps * k) per batch, as in
-    * [[run]]) — never chunk payloads. */
+    * (oldest -> newest), strictly in timestep order per array —
+    * [[runWindowsPrepared]] with nothing to prepare. */
   def runWindows(
       chunks: DataFrame,
       defs: Seq[ArrayDef],
       onTimestep: (String, Long, Seq[Double]) => Unit,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
-    assembleWindows(toMessages(chunks, defs), defs).writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[TimestepWindow], _: Long) =>
-        batch.collect().sortBy(t => (t.name, t.timestep))
-          .foreach(t => onTimestep(t.name, t.timestep, t.window))
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+    runWindowsPrepared(chunks, defs, prepare = _ => (), advance = 0, onTimestep, trigger = trigger)
 
   /** Release each timestep's FULL chunk set once every chunk arrived —
     * the payload-level analog of [[assemble]], for callbacks that compute
@@ -271,47 +231,30 @@ object Simulation {
     * on emission; a 'done' marker (one boolean per completed timestep)
     * rejects at-least-once replays.
     *
-    * `doneTtlMs > 0` expires each key's state (marker AND any stuck
-    * partial buffer) that long after its last activity, via a
-    * processing-time timeout — without it a long-running stream retains
-    * one marker per (name, timestep) forever, the streaming face of the
-    * memory-release contract (tests/test_memory_release.py). Choose the
-    * TTL longer than the source's replay horizon: a replay arriving
-    * after expiry re-opens (and re-emits) its timestep, and a partial
-    * timestep idle past the TTL is dropped rather than completed.
-    * Processing-time timeouts make the query run a (cheap, no-data)
-    * batch per trigger even while idle, so pair a TTL with an explicit
-    * trigger interval — the default ASAP trigger would busy-loop. */
+    * `doneTtlMs` is the [[KeyedState]] idle TTL, keyed per (name,
+    * timestep): it expires the marker AND any stuck partial buffer, so a
+    * partial timestep idle past the TTL is dropped rather than
+    * completed. */
   def assembleChunks(chunks: DataFrame, doneTtlMs: Long = 0L): Dataset[RawChunk] = {
     import chunks.sparkSession.implicits._
-    val timeout =
-      if (doneTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    packed(chunks.select(col("name"), col("timestep"), col("nbChunks"), col("pos"), col("data")))
+    val keyed = packed(chunks.select(col("name"), col("timestep"), col("nbChunks"), col("pos"), col("data")))
       .as[RawChunk]
       .groupByKey(c => (c.name, c.timestep))
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (_: (String, Long), it: Iterator[RawChunk], state: GroupState[ChunkAsmState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(ChunkAsmState(Vector.empty, done = false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[RawChunk]
-            it.foreach { c =>
-              if (!st.done && !st.buffered.exists(_.pos == c.pos)) {
-                val buf = st.buffered :+ c
-                st = if (buf.length >= c.nbChunks) {
-                  out ++= buf
-                  ChunkAsmState(Vector.empty, done = true) // payloads freed
-                } else st.copy(buffered = buf)
-              }
-            }
-            state.update(st)
-            if (doneTtlMs > 0) state.setTimeoutDuration(doneTtlMs)
-            out.iterator
+    KeyedState.fold(keyed, ChunkAsmState(Vector.empty, done = false), doneTtlMs) {
+      (_: (String, Long), it: Iterator[RawChunk], st0: ChunkAsmState) =>
+        var st = st0
+        val out = scala.collection.mutable.ArrayBuffer.empty[RawChunk]
+        it.foreach { c =>
+          if (!st.done && !st.buffered.exists(_.pos == c.pos)) {
+            val buf = st.buffered :+ c
+            st = if (buf.length >= c.nbChunks) {
+              out ++= buf
+              ChunkAsmState(Vector.empty, done = true) // payloads freed
+            } else st.copy(buffered = buf)
           }
-        })
+        }
+        (st, out.iterator)
+    }
   }
 
   /** Run an arbitrary distributed [[ChunkedArray]] computation on the
@@ -337,14 +280,10 @@ object Simulation {
       op: ChunkedArray => DataFrame,
       sink: (DataFrame, Long) => Unit,
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    assembleChunks(chunks.filter(col("name") === name)).writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[RawChunk], batchId: Long) =>
-        val df = batch.toDF().select(col("timestep"), col("pos"), col("data"))
-        sink(op(ChunkedArray(df, geom)), batchId)
-      }
-      .start()
+    deliver(assembleChunks(chunks.filter(col("name") === name)), trigger) { (batch, batchId) =>
+      val df = batch.toDF().select(col("timestep"), col("pos"), col("data"))
+      sink(op(ChunkedArray(df, geom)), batchId)
+    }
 
   /** [[runWindows]] with preparation pipelined `advance` iterations ahead
     * — doreisa's `preparation_advance` (doreisa/window_api.py:58-72 calls
@@ -376,16 +315,11 @@ object Simulation {
     // prime the pipeline before any data arrives, as the reference does
     // for the first `preparation_advance` iterations
     prepareThrough(start + advance)
-    assembleWindows(toMessages(chunks, defs), defs, start).writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[TimestepWindow], _: Long) =>
-        batch.collect().sortBy(t => (t.name, t.timestep)).foreach { t =>
-          prepareThrough(t.timestep + advance)
-          onTimestep(t.name, t.timestep, t.window)
-        }
-      }
-      .start()
+    deliverInOrder(assembleWindows(toMessages(chunks, defs), defs, start), trigger)(
+        t => (t.name, t.timestep)) { t =>
+      prepareThrough(t.timestep + advance)
+      onTimestep(t.name, t.timestep, t.window)
+    }
   }
 }
 
@@ -410,6 +344,13 @@ private case class WinState(recent: Map[Long, Seq[Double]], maxT: Long)
   */
 object WindowedArrays {
 
+  private def byPosition(chunks: DataFrame) = {
+    import chunks.sparkSession.implicits._
+    chunks.select(col("name"), col("timestep"), col("pos"), col("data"))
+      .as[(String, Long, Seq[Int], Seq[Double])]
+      .groupByKey { case (name, _, pos, _) => (name, pos) }
+  }
+
   /** Emit `chunk(t) - chunk(t-1)` per grid position as chunks arrive.
     * Out-of-order timesteps resolve in BOTH directions within the
     * retained horizon: a late predecessor triggers its waiting
@@ -420,13 +361,10 @@ object WindowedArrays {
     * must keep one payload length (contract failure fails the query
     * loudly rather than truncating silently).
     *
-    * `idleTtlMs > 0` expires a position's state that long after its last
-    * chunk (processing-time timeout) — the [[assemble]]/[[assembleChunks]]
-    * idle-TTL contract, here keyed per (name, pos): without it a dead
-    * producer pins every grid position's recent-payload map forever. A
-    * post-expiry replay is treated as a fresh stream at that position
-    * (its first chunk emits no delta). Pair a TTL with an explicit
-    * trigger interval (see [[assembleChunks]]). */
+    * `idleTtlMs` is the [[KeyedState]] idle TTL, keyed per (name, pos):
+    * without it a dead producer pins every grid position's
+    * recent-payload map forever. A post-expiry replay is treated as a
+    * fresh stream at that position (its first chunk emits no delta). */
   def elementwiseDelta(
       chunks: DataFrame, horizon: Int = 8, idleTtlMs: Long = 0L): Dataset[DeltaChunk] = {
     import chunks.sparkSession.implicits._
@@ -435,91 +373,53 @@ object WindowedArrays {
         s"chunk $name$pos changed payload length at t=$t: ${prev.length} -> ${cur.length}")
       DeltaChunk(name, t, pos, cur.zip(prev).map { case (x, y) => x - y })
     }
-    val timeout =
-      if (idleTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    chunks.select(col("name"), col("timestep"), col("pos"), col("data"))
-      .as[(String, Long, Seq[Int], Seq[Double])]
-      .groupByKey { case (name, _, pos, _) => (name, pos) }
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (key: (String, Seq[Int]), it: Iterator[(String, Long, Seq[Int], Seq[Double])],
-         state: GroupState[WinState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-          var st = state.getOption.getOrElse(WinState(Map.empty, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[DeltaChunk]
-          // process in timestep order so same-batch predecessors resolve
-          it.toSeq.sortBy(_._2).foreach { case (name, t, pos, data) =>
-            val tooOld = st.maxT != Long.MinValue && t <= st.maxT - horizon
-            if (!tooOld && !st.recent.contains(t)) {
-              val keep = math.max(t, st.maxT)
-              st = WinState((st.recent + (t -> data))
-                .filter { case (t0, _) => t0 >= keep - horizon }, keep)
-              st.recent.get(t - 1).foreach(prev => out += diff(name, t, data, prev, pos))
-              // late predecessor: emit the successor's waiting delta
-              st.recent.get(t + 1).foreach(next => out += diff(name, t + 1, next, data, pos))
-            }
+    KeyedState.fold(byPosition(chunks), WinState(Map.empty, Long.MinValue), idleTtlMs) {
+      (_: (String, Seq[Int]), it: Iterator[(String, Long, Seq[Int], Seq[Double])], st0: WinState) =>
+        var st = st0
+        val out = scala.collection.mutable.ArrayBuffer.empty[DeltaChunk]
+        // process in timestep order so same-batch predecessors resolve
+        it.toSeq.sortBy(_._2).foreach { case (name, t, pos, data) =>
+          val tooOld = st.maxT != Long.MinValue && t <= st.maxT - horizon
+          if (!tooOld && !st.recent.contains(t)) {
+            val keep = math.max(t, st.maxT)
+            st = WinState((st.recent + (t -> data))
+              .filter { case (t0, _) => t0 >= keep - horizon }, keep)
+            st.recent.get(t - 1).foreach(prev => out += diff(name, t, data, prev, pos))
+            // late predecessor: emit the successor's waiting delta
+            st.recent.get(t + 1).foreach(next => out += diff(name, t + 1, next, data, pos))
           }
-          state.update(st)
-          if (idleTtlMs > 0) state.setTimeoutDuration(idleTtlMs)
-          out.iterator
-          }
-        })
+        }
+        (st, out.iterator)
+    }
   }
 
   /** Emit each chunk with the last `k` payloads at its grid position
     * (oldest -> newest, clipped at `start`) — the chunk-local face of
     * doreisa's `window_size=k` list: a consumer computes `arr(t) -
     * arr(t-j)` or a k-array average per position without any shuffle.
-    * Delivery is strictly in timestep order per (name, pos); an emitted
-    * timestep's watermark rejects replays, and a missing timestep stalls
-    * that position as in [[Simulation.assembleWindows]]. State per key is
-    * the buffered payloads — O(k + out-of-order advance).
+    * Delivery is strictly in timestep order per (name, pos)
+    * ([[KeyedState.drain]], as in [[Simulation.assembleWindows]]); an
+    * emitted timestep's watermark rejects replays, and a missing timestep
+    * stalls that position. State per key is the buffered payloads —
+    * O(k + out-of-order advance).
     *
-    * `idleTtlMs > 0` expires a position's WHOLE state (buffered payloads
-    * AND the emission watermark) that long after its last chunk — the
-    * [[assembleWindows]] TTL contract keyed per (name, pos). The
-    * watermark resets to `start` with the rest of the state, so a
-    * post-expiry replay re-emits from the replayed timestep on. Pair a
-    * TTL with an explicit trigger interval (see [[assembleChunks]]). */
+    * `idleTtlMs` is the [[KeyedState]] idle TTL, keyed per (name, pos);
+    * the emission watermark expires with the buffered payloads, so a
+    * post-expiry replay re-emits from the replayed timestep on. */
   def chunkWindows(
       chunks: DataFrame, k: Int, start: Long = 0L, idleTtlMs: Long = 0L): Dataset[ChunkWindow] = {
     import chunks.sparkSession.implicits._
     require(k >= 1, "window size must be >= 1")
-    val timeout =
-      if (idleTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    chunks.select(col("name"), col("timestep"), col("pos"), col("data"))
-      .as[(String, Long, Seq[Int], Seq[Double])]
-      .groupByKey { case (name, _, pos, _) => (name, pos) }
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (key: (String, Seq[Int]), it: Iterator[(String, Long, Seq[Int], Seq[Double])],
-         state: GroupState[ChunkWinState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-          var st = state.getOption.getOrElse(ChunkWinState(Map.empty, start))
-          val out = scala.collection.mutable.ArrayBuffer.empty[ChunkWindow]
-          it.foreach { case (name, t, pos, data) =>
-            if (t >= st.nextEmit && !st.buffered.contains(t)) {
-              st = st.copy(buffered = st.buffered + (t -> data))
-              while (st.buffered.contains(st.nextEmit)) {
-                val cur = st.nextEmit
-                out += ChunkWindow(name, cur, pos,
-                  (math.max(cur - k + 1, start) to cur).map(st.buffered))
-                st = ChunkWinState(
-                  st.buffered.filter { case (t0, _) => t0 >= cur + 2 - k }, cur + 1)
-              }
-            }
-          }
-          state.update(st)
-          if (idleTtlMs > 0) state.setTimeoutDuration(idleTtlMs)
-          out.iterator
-          }
-        })
+    KeyedState.fold(byPosition(chunks), ChunkWinState(Map.empty, start), idleTtlMs) {
+      (key: (String, Seq[Int]), it: Iterator[(String, Long, Seq[Int], Seq[Double])], st0: ChunkWinState) =>
+        var buffered = st0.buffered
+        it.foreach { case (_, t, _, data) =>
+          if (t >= st0.nextEmit && !buffered.contains(t)) buffered += t -> data
+        }
+        val (left, nextEmit, wins) = KeyedState.drain(buffered, st0.nextEmit, k, start)
+        (ChunkWinState(left, nextEmit),
+          wins.iterator.map { case (t, w) => ChunkWindow(key._1, t, key._2, w) })
+    }
   }
 }
 

@@ -6,13 +6,7 @@ import java.nio.file.{Files, Paths}
 // scale commentary. Run: sbt "Test/runMain graft.DumpPlans"
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.measurementSession("8", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
 

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Library code has one spelling per mechanism: no env-var reads, no
   * process-global mutable toggles and no memo map outside the one
-  * registry. An A/B seam is a paired experiment on a branch, not a
+  * registry, and the streaming loop's idle TTL is spelled only in
+  * KeyedState. An A/B seam is a paired experiment on a branch, not a
   * switch shipped in the operators. Mains (Bench, Verify, ScaleProbe)
   * sit outside the scanned directories. */
 class SeamScanSpec extends AnyFunSuite {
@@ -42,5 +43,16 @@ class SeamScanSpec extends AnyFunSuite {
     val found = hits(files.filterNot(f => allowed(f.getFileName.toString)))(
       l => map.findFirstIn(l).isDefined)
     assert(found.isEmpty, s"memo maps outside the registry:\n${found.mkString("\n")}")
+  }
+
+  test("the streaming loop spells its idle TTL once, in KeyedState") {
+    // a state machine wiring its own processing-time timeout forks the
+    // TTL contract that KeyedState.fold states once
+    val streaming = files.filter(_.startsWith(Paths.get("src/main/scala/graft/streaming")))
+    for (word <- Seq("ProcessingTimeTimeout", "setTimeoutDuration")) {
+      val found = hits(streaming)(_.contains(word))
+      assert(found.size == 1 && found.head.contains("KeyedState.scala:"),
+        s"$word must appear once, in KeyedState.fold:\n${found.mkString("\n")}")
+    }
   }
 }

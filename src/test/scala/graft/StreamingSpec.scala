@@ -514,6 +514,38 @@ class StreamingSpec extends AnyFunSuite {
     val wins = spark.table("cw_ttl").as[graft.streaming.ChunkWindow].collect()
     assert(wins.count(_.timestep == 0L) == 2,
       "post-expiry replay must re-emit from the reset watermark")
+
+    // assemble and assembleWindows, keyed per array name: a replayed t=0
+    // re-emits after expiry and is dropped within the TTL; t=1 rides in
+    // the replay's batch so its row proves that batch ran
+    def zerosAfterReplay(table: String, ttlMs: Long,
+        op: (org.apache.spark.sql.Dataset[ChunkMsg], Long) => org.apache.spark.sql.DataFrame): Long = {
+      val in = MemoryStream[ChunkMsg]
+      val q = op(in.toDS(), ttlMs).writeStream
+        .format("memory").queryName(table).outputMode(OutputMode.Append())
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(50L))
+        .start()
+      in.addData(ChunkMsg("a", 0L, 1, 1.0))
+      awaitRows(table, 1)
+      Thread.sleep(500) // past a 1 ms TTL a no-data batch expires the state
+      in.addData(ChunkMsg("a", 0L, 1, 1.0), ChunkMsg("a", 1L, 1, 2.0))
+      val deadline = System.currentTimeMillis + 30000
+      while (spark.table(table).where("timestep = 1").count() == 0 &&
+          System.currentTimeMillis < deadline) Thread.sleep(50)
+      q.stop()
+      assert(spark.table(table).where("timestep = 1").count() == 1, s"$table never emitted t=1")
+      spark.table(table).where("timestep = 0").count()
+    }
+    val asm = (m: org.apache.spark.sql.Dataset[ChunkMsg], ttl: Long) =>
+      Simulation.assemble(m, idleTtlMs = ttl).toDF()
+    val asmWin = (m: org.apache.spark.sql.Dataset[ChunkMsg], ttl: Long) =>
+      Simulation.assembleWindows(m, Seq(ArrayDef("a", windowSize = 2)), idleTtlMs = ttl).toDF()
+    assert(zerosAfterReplay("asm_ttl", 1L, asm) == 2, "assemble: post-expiry replay must re-emit")
+    assert(zerosAfterReplay("asm_ttl_in", 3600000L, asm) == 1, "assemble: in-TTL replay must drop")
+    assert(zerosAfterReplay("asmw_ttl", 1L, asmWin) == 2,
+      "assembleWindows: post-expiry replay must re-emit from the reset watermark")
+    assert(zerosAfterReplay("asmw_ttl_in", 3600000L, asmWin) == 1,
+      "assembleWindows: in-TTL replay must drop")
   }
 
   test("WindowedArrays.chunkWindows delivers the last k payloads per position") {
@@ -614,6 +646,61 @@ class StreamingSpec extends AnyFunSuite {
       .as[(String, Long, Double, Option[Double])].collect().sortBy(_._2)
     assert(rows.map(r => (r._2, r._3)).toSeq == Seq((0L, 6.0), (1L, 14.0)))
     assert(rows.last._4.contains(8.0))
+  }
+
+  test("assembleWindows and assembleChunks restart from their checkpoint with unchanged output") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val schema = StructType(Seq(
+      StructField("name", StringType), StructField("timestep", LongType),
+      StructField("nbChunks", IntegerType), StructField("pos", ArrayType(IntegerType)),
+      StructField("data", ArrayType(DoubleType))))
+    // two producer files: t=1 straddles them, so its partial state must
+    // survive the restart, and the second file replays an emitted t=0 chunk
+    val files = Seq(
+      Seq(("a", 0L, 2, Seq(0), Seq(1.25, 2.5)), ("a", 0L, 2, Seq(1), Seq(3.75)),
+        ("a", 1L, 2, Seq(0), Seq(0.5))),
+      Seq(("a", 1L, 2, Seq(1), Seq(4.0, 1.5)), ("a", 0L, 2, Seq(1), Seq(3.75)),
+        ("a", 2L, 2, Seq(1), Seq(7.0)), ("a", 2L, 2, Seq(0), Seq(2.25))))
+    val defs = Seq(ArrayDef("a", windowSize = 2))
+    // parquet sink on a fixed checkpoint; `restart` stops the query after
+    // the first file and starts it again on the same checkpoint
+    def run(tag: String, restart: Boolean, op: DataFrame => DataFrame): DataFrame = {
+      val (src, out, cp) = (s"$base/$tag/src", s"$base/$tag/out", s"$base/$tag/cp")
+      def start() = op(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(s"$src/*"))
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", cp).outputMode(OutputMode.Append()).start()
+      def write(i: Int): Unit = files(i).toDF("name", "timestep", "nbChunks", "pos", "data")
+        .coalesce(1).write.parquet(s"$src/f$i")
+      write(0)
+      var q = start()
+      q.processAllAvailable()
+      if (restart) q.stop()
+      write(1)
+      if (restart) q = start()
+      q.processAllAvailable()
+      q.stop()
+      spark.read.parquet(out)
+    }
+    val windows = (s: DataFrame) =>
+      Simulation.assembleWindows(Simulation.toMessages(s, defs), defs).toDF()
+    val winOnce = run("win_once", restart = false, windows)
+      .as[(String, Long, Seq[Double])].collect().sortBy(_._2).toSeq
+    val winRestarted = run("win_restart", restart = true, windows)
+      .as[(String, Long, Seq[Double])].collect().sortBy(_._2).toSeq
+    assert(winOnce == Seq(("a", 0L, Seq(7.5)), ("a", 1L, Seq(7.5, 6.0)), ("a", 2L, Seq(6.0, 9.25))))
+    assert(winRestarted == winOnce)
+
+    val chunks = (s: DataFrame) => Simulation.assembleChunks(s).toDF()
+    def sorted(df: DataFrame) = df.as[graft.streaming.RawChunk].collect()
+      .sortBy(c => (c.timestep, c.pos.head)).toSeq
+    val chunksOnce = sorted(run("chunks_once", restart = false, chunks))
+    val chunksRestarted = sorted(run("chunks_restart", restart = true, chunks))
+    assert(chunksOnce.map(c => (c.timestep, c.pos)) ==
+      Seq((0L, Seq(0)), (0L, Seq(1)), (1L, Seq(0)), (1L, Seq(1)), (2L, Seq(0)), (2L, Seq(1))))
+    assert(chunksRestarted == chunksOnce)
   }
 
   test("EventPipelines.sessions merges events within the gap") {
@@ -918,6 +1005,39 @@ class StreamingSpec extends AnyFunSuite {
     val want = ChunkedArray(batchRows, geom).stencilLaplacian().rows2d.collect()
       .map(r => (r.getLong(1), r.getLong(2)) -> r.getDouble(3)).toMap
     assert(gotCells == want)
+  }
+
+  test("HaloStencil is bit-equal to the batch stencil on a 3-d field") {
+    import graft.arrays.{ArrayGeometry, ChunkedArray}
+    import graft.streaming.{HaloChunk, HaloStencil}
+    implicit val sc = spark.sqlContext
+    // a 2x2x2 grid of 2x2x2 chunks holding seeded two-decimal values:
+    // with three axes the association of the neighbor sum shows in the
+    // last bit of some cells, which integer 2-d data cannot reveal
+    val geom = ArrayGeometry(Seq(2, 2, 2), Seq(2, 2, 2))
+    val rnd = new scala.util.Random(7)
+    val chunks = for (c0 <- 0 to 1; c1 <- 0 to 1; c2 <- 0 to 1)
+      yield (Seq(c0, c1, c2), Seq.fill(8)((rnd.nextInt(20001) - 10000) / 100.0))
+    val in = MemoryStream[(String, Long, Seq[Int], Seq[Double])]
+    val q = HaloStencil.stencilChunks(in.toDF().toDF("name", "timestep", "pos", "data"), geom)
+      .writeStream.format("memory").queryName("halo3d_out").outputMode(OutputMode.Append()).start()
+    chunks.grouped(4).foreach { part =>
+      in.addData(part.map { case (p, d) => ("a", 0L, p, d) }: _*)
+      q.processAllAvailable()
+    }
+    q.stop()
+    val got = spark.table("halo3d_out").as[HaloChunk].collect().flatMap { c =>
+      c.data.zipWithIndex.map { case (v, idx) =>
+        Seq(2L * c.pos(0) + idx / 4, 2L * c.pos(1) + idx / 2 % 2, 2L * c.pos(2) + idx % 2) -> v
+      }
+    }.toMap
+    val batchRows = chunks.map { case (p, d) => (0L, p, d) }.toDF("timestep", "pos", "data")
+    val want = ChunkedArray(batchRows, geom).stencilLaplacian().rowsNd.collect()
+      .map(r => Seq(r.getLong(1), r.getLong(2), r.getLong(3)) -> r.getDouble(4)).toMap
+    assert(got.size == 64 && got.keySet == want.keySet)
+    val bits = java.lang.Double.doubleToRawLongBits _
+    val differ = want.keys.count(k => bits(got(k)) != bits(want(k)))
+    assert(differ == 0, s"$differ of 64 cells differ from the batch stencil")
   }
 
   test("StreamingSessions merges disorder, bridges across batches, closes on timeout") {
