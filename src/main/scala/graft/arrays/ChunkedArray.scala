@@ -14,6 +14,16 @@ final case class ArrayGeometry(chunksPerDim: Seq[Int], chunkShape: Seq[Int]) {
   def dims: Int = chunksPerDim.length
   def chunkElems: Int = chunkShape.product
   def dimSize(d: Int): Int = chunksPerDim(d) * chunkShape(d)
+  /** Row-major strides of a chunk's packed payload. */
+  def strides: Seq[Int] = ArrayGeometry.rowMajor(chunkShape)
+  /** Row-major strides over the global dims — long: flat indices
+    * overflow int far below the target scale. */
+  def globalStrides: Seq[Long] = (0 until dims).map(dimSize(_).toLong).scanRight(1L)(_ * _).tail
+}
+
+object ArrayGeometry {
+  /** Row-major strides of a box with extents `exts`. */
+  def rowMajor(exts: Seq[Int]): Seq[Int] = exts.scanRight(1)(_ * _).tail
 }
 
 /** Distributed N-dimensional double array, chunked on a regular grid —
@@ -37,13 +47,18 @@ final case class ArrayGeometry(chunksPerDim: Seq[Int], chunkShape: Seq[Int]) {
   *  - [[sliceRange]] prunes whole chunks with a `pos` predicate before
   *    touching payloads (the analog of partition pruning);
   *  - [[zipWith]] joins on (timestep, pos) — co-partition/bucket both
-  *    sides on that key to make it shuffle-free on a cluster.
+  *    sides on that key to make it shuffle-free on a cluster;
+  *  - neighborhood ops ([[roll]], [[pad]], the stencils) ship payload
+  *    sub-boxes through the one halo exchange in [[Halo]], which also
+  *    defines the message kinds and the box layout the native stencil
+  *    kernels read.
   *
   * Exactness: reductions fold through DECIMAL accumulators (values in the
   * test data carry 2 decimals), so results are order-independent and
   * reproducible cross-engine (see SURVEY §5).
   */
 final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
+  import ArrayGeometry.rowMajor
   import ChunkedArray._
 
   /** Element type of the payload — derived from the plan's schema, so the
@@ -556,83 +571,17 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * switches to a posexplode-by-slab layout: one ROW per slab line
     * sharing ONE window expression, carries reassembled per chunk and
     * joined back. Same bytes on the wire, bounded expression count. */
-  def cumsumAxis(axis: Int): ChunkedArray = {
-    require(axis >= 0 && axis < geom.dims, s"axis $axis out of range for rank ${geom.dims}")
-    val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
-    val len = shape(axis)
-    val rem = shape.indices.filterNot(_ == axis) // non-scanned dims
-    val slabElems = geom.chunkElems / len
-    val slabStrides = rem.map(shape).scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
-    // row-major slab coord s -> base payload offset of its axis-line
-    def baseOf(s: Column): Column = rem.zip(slabStrides)
-      .map { case (j, ss) => (fdiv(s, ss) % shape(j)) * strides(j) }
-      .reduceOption[Column](_ + _).getOrElse(lit(0))
-    // payload index -> its slab coord
-    def slabOf(idx: Column): Column = rem.zip(slabStrides)
-      .map { case (j, ss) => (fdiv(idx, strides(j)) % shape(j)) * lit(ss) }
-      .reduceOption[Column](_ + _).getOrElse(lit(0))
-    val lines = transform(sequence(lit(0), lit(slabElems - 1)), s =>
-      org.apache.spark.sql.graftexpr.PrefixSumDec.prefixSumDec(
-        transform(sequence(lit(0), lit(len - 1)), i =>
-          col("data")(baseOf(s) + i * strides(axis)).cast("double"))))
-    val staged = df
-      .select(col("timestep"), col("pos"), lines.as("lines"))
-      .withColumn("tot", transform(col("lines"), l => element_at(l, len)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("timestep") +: rem.map(d => col("pos")(d)): _*)
-      .orderBy(col("pos")(axis))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val outData = transform(sequence(lit(0), lit(geom.chunkElems - 1)), idx => {
-      val s = slabOf(idx)
-      val i = fdiv(idx, strides(axis)) % len
-      (element_at(element_at(col("lines"), s + 1), i + 1) +
-        element_at(col("carry"), s + 1)).cast("double")
-    })
-    val withCarry =
-      if (slabElems <= MaxCarryWidth) {
-        // One running decimal SUM per slab position, all sharing one
-        // window spec: a single WindowExec pass with O(1) state per sum,
-        // linear in the chunk line. (A collect_list(tot) window +
-        // per-row fold reads the same bytes but re-folds every
-        // predecessor vector at each chunk — quadratic in the line
-        // length, which is exactly the long dimension at 100 TB.)
-        val carry = array((0 until slabElems).map(s =>
-          coalesce(sum(element_at(col("tot"), s + 1)).over(w), zeroDec)): _*)
-        staged.withColumn("carry", carry)
-      } else {
-        // Wide slabs: one row per slab line through ONE window
-        // expression (expression count stays O(1) however wide the
-        // chunk), then carries reassemble per chunk — a struct sort on
-        // the chunk's OWN slab positions, bounded by the chunk size —
-        // and join back on the chunk key. Both relations are O(#chunks):
-        // the join shuffles on the grid key, never broadcasts.
-        val w2 = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("timestep") +: rem.map(d => col("pos")(d)) :+ col("s"): _*)
-          .orderBy(col("pos")(axis))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val carries = staged
-          .select(col("timestep"), col("pos"), posexplode(col("tot")).as(Seq("s", "t")))
-          .withColumn("c", coalesce(sum(col("t")).over(w2), zeroDec))
-          .groupBy("timestep", "pos")
-          .agg(transform(array_sort(collect_list(struct(col("s"), col("c")))),
-            e => e.getField("c")).as("carry"))
-        staged.join(carries.hint("shuffle_hash"), Seq("timestep", "pos"))
-      }
-    copy(df = withCarry.select(col("timestep"), col("pos"), outData.as("data")))
-  }
+  def cumsumAxis(axis: Int): ChunkedArray =
+    scanAxis(axis, org.apache.spark.sql.graftexpr.PrefixSumDec.prefixSumDec,
+      sum(_), zeroDec)(_ + _)
 
   /** Cumulative product along `axis` for ANY rank (dask/numpy
     * `cumprod(axis=)`) — [[cumsumAxis]]'s multiplicative twin on the
-    * same carry-window machinery: chunk-local per-line prefix products,
-    * then the cross-chunk carry (the elementwise PRODUCT of preceding
-    * chunks' line totals) through a window over per-chunk total vectors
-    * partitioned by the non-scanned grid dims — O(#chunks) rows of
-    * slab-sized vectors on the wire, never elements. Wide slabs switch
-    * to the posexplode one-window-expression layout exactly like
-    * cumsumAxis (bounded expression count at production chunk shapes).
+    * same scan: chunk-local per-line prefix products, then the
+    * cross-chunk carry (the elementwise PRODUCT of preceding chunks'
+    * line totals) through the same window over per-chunk total vectors
+    * — O(#chunks) rows of slab-sized vectors on the wire, never
+    * elements, with the same wide-slab carry layout.
     *
     * EXACTNESS CONTRACT (the [[axisProd]] story): double products are
     * order-sensitive in general; the scan is exact — hence
@@ -643,57 +592,74 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * payloads are documented order-sensitive, like axisProd. No native
     * decimal kernel here: a product of decimals overflows any fixed
     * scale, so the small-integer contract IS the exact path. */
-  def cumprodAxis(axis: Int): ChunkedArray = {
-    require(axis >= 0 && axis < geom.dims, s"axis $axis out of range for rank ${geom.dims}")
-    val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
-    val len = shape(axis)
-    val rem = shape.indices.filterNot(_ == axis)
-    val slabElems = geom.chunkElems / len
-    val slabStrides = rem.map(shape).scanRight(1)(_ * _).tail
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
-    def baseOf(s: Column): Column = rem.zip(slabStrides)
-      .map { case (j, ss) => (fdiv(s, ss) % shape(j)) * strides(j) }
-      .reduceOption[Column](_ + _).getOrElse(lit(0))
-    def slabOf(idx: Column): Column = rem.zip(slabStrides)
-      .map { case (j, ss) => (fdiv(idx, strides(j)) % shape(j)) * lit(ss) }
-      .reduceOption[Column](_ + _).getOrElse(lit(0))
+  def cumprodAxis(axis: Int): ChunkedArray =
     // per-line prefix products: prefix(i) = Π line[0..i] — a left fold
     // per prefix (O(len²) chunk-local flops on exact small operands;
     // a native prefix kernel would slot in like PrefixSumDec if
     // production lines grow long)
-    val lines = transform(sequence(lit(0), lit(slabElems - 1)), s => {
-      val line = transform(sequence(lit(0), lit(len - 1)), i =>
-        col("data")(baseOf(s) + i * strides(axis)).cast("double"))
-      transform(sequence(lit(1), lit(len)), k =>
-        aggregate(slice(line, lit(1), k), lit(1.0), _ * _))
-    })
+    scanAxis(axis, line => transform(sequence(lit(1), lit(geom.chunkShape(axis))), k =>
+      aggregate(slice(line, lit(1), k), lit(1.0), _ * _)),
+      product(_), lit(1.0))(_ * _)
+
+  /** The distributed scan along `axis` behind [[cumsumAxis]] and
+    * [[cumprodAxis]]: `prefix` turns each chunk-local axis line into its
+    * inclusive prefix, `carry` aggregates the preceding chunks' line
+    * totals over the scan window (`identity` where none precede), and
+    * `combine` folds the carry into each prefix cell. */
+  private def scanAxis(axis: Int, prefix: Column => Column, carry: Column => Column,
+      identity: Column)(combine: (Column, Column) => Column): ChunkedArray = {
+    require(axis >= 0 && axis < geom.dims, s"axis $axis out of range for rank ${geom.dims}")
+    val shape = geom.chunkShape
+    val strides = geom.strides
+    val len = shape(axis)
+    val rem = shape.indices.filterNot(_ == axis) // non-scanned dims
+    val slabElems = geom.chunkElems / len
+    val slabStrides = rowMajor(rem.map(shape))
+    // row-major slab coord s -> base payload offset of its axis-line
+    def baseOf(s: Column): Column = rem.zip(slabStrides)
+      .map { case (j, ss) => (fdiv(s, ss) % shape(j)) * strides(j) }
+      .reduceOption[Column](_ + _).getOrElse(lit(0))
+    // payload index -> its slab coord
+    def slabOf(idx: Column): Column = rem.zip(slabStrides)
+      .map { case (j, ss) => (fdiv(idx, strides(j)) % shape(j)) * lit(ss) }
+      .reduceOption[Column](_ + _).getOrElse(lit(0))
+    val lines = transform(sequence(lit(0), lit(slabElems - 1)), s =>
+      prefix(transform(sequence(lit(0), lit(len - 1)), i =>
+        col("data")(baseOf(s) + i * strides(axis)).cast("double"))))
     val staged = df
       .select(col("timestep"), col("pos"), lines.as("lines"))
       .withColumn("tot", transform(col("lines"), l => element_at(l, len)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("timestep") +: rem.map(d => col("pos")(d)): _*)
+    def window(extra: Column*) = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("timestep") +: rem.map(d => col("pos")(d)) ++: extra: _*)
       .orderBy(col("pos")(axis))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val outData = transform(sequence(lit(0), lit(geom.chunkElems - 1)), idx => {
       val s = slabOf(idx)
       val i = fdiv(idx, strides(axis)) % len
-      (element_at(element_at(col("lines"), s + 1), i + 1) *
+      combine(element_at(element_at(col("lines"), s + 1), i + 1),
         element_at(col("carry"), s + 1)).cast("double")
     })
     val withCarry =
       if (slabElems <= MaxCarryWidth) {
-        val carry = array((0 until slabElems).map(s =>
-          coalesce(product(element_at(col("tot"), s + 1)).over(w), lit(1.0))): _*)
-        staged.withColumn("carry", carry)
+        // One running window aggregate per slab position, all sharing one
+        // window spec: a single WindowExec pass with O(1) state each,
+        // linear in the chunk line. (A collect_list(tot) window +
+        // per-row fold reads the same bytes but re-folds every
+        // predecessor vector at each chunk — quadratic in the line
+        // length, which is exactly the long dimension at 100 TB.)
+        val w = window()
+        staged.withColumn("carry", array((0 until slabElems).map(s =>
+          coalesce(carry(element_at(col("tot"), s + 1)).over(w), identity)): _*))
       } else {
-        val w2 = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("timestep") +: rem.map(d => col("pos")(d)) :+ col("s"): _*)
-          .orderBy(col("pos")(axis))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+        // Wide slabs: one row per slab line through ONE window
+        // expression (expression count stays O(1) however wide the
+        // chunk), then carries reassemble per chunk — a struct sort on
+        // the chunk's OWN slab positions, bounded by the chunk size —
+        // and join back on the chunk key. Both relations are O(#chunks):
+        // the join shuffles on the grid key, never broadcasts.
         val carries = staged
           .select(col("timestep"), col("pos"), posexplode(col("tot")).as(Seq("s", "t")))
-          .withColumn("c", coalesce(product(col("t")).over(w2), lit(1.0)))
+          .withColumn("c", coalesce(carry(col("t")).over(window(col("s"))), identity))
           .groupBy("timestep", "pos")
           .agg(transform(array_sort(collect_list(struct(col("s"), col("c")))),
             e => e.getField("c")).as("carry"))
@@ -752,11 +718,9 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     require(axis >= 0 && axis < geom.dims, s"axis $axis out of range for rank ${geom.dims}")
     require(k >= 1, s"k must be >= 1, got $k")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val newShape = shape.updated(axis, shape(axis) * k)
-    val newStrides = newShape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val newStrides = rowMajor(newShape)
     val t = transform(sequence(lit(0), lit(newShape.product - 1)), idx =>
       col("data")((0 until geom.dims).map { d =>
         val c = fdiv(idx, newStrides(d)) % newShape(d)
@@ -823,11 +787,9 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     require(perm.sorted == (0 until geom.dims),
       s"$perm is not a permutation of 0..${geom.dims - 1}")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val newShape = perm.map(shape)
-    val newStrides = newShape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val newStrides = rowMajor(newShape)
     // newdata[k] = data[Σ_d newcoord_d(k) * strides(perm(d))] — a
     // STATIC affine gather: double payloads go through the compiled
     // GatherStatic kernel (one call per chunk, few-int spec on the
@@ -920,9 +882,7 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
   def flip(axis: Int): ChunkedArray = {
     require(axis >= 0 && axis < geom.dims, s"axis $axis out of range")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val strides = geom.strides
     // newdata[k] = data[k with coord_axis := shape-1-coord_axis] — a
     // static mirror (mult=-1, add=S-1 on the axis), compiled like the
     // transpose gather
@@ -965,18 +925,17 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
       geom.chunkShape(a1) == geom.chunkShape(a2),
       s"diagonal axes must chunk identically: $geom")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val others = (0 until n).filterNot(d => d == a1 || d == a2)
     val outShape = others.map(shape(_)) :+ shape(a1)
     val outSrcStrides = others.map(strides(_)) :+ (strides(a1) + strides(a2))
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
     val t =
       if (dtype == org.apache.spark.sql.types.DoubleType)
         org.apache.spark.sql.graftexpr.ChunkFolds.gatherAffineNative(
           col("data"), outShape, outShape.map(_ => 1), outShape.map(_ => 0),
           outSrcStrides)
       else {
-        val outStrides = outShape.scanRight(1)(_ * _).tail
+        val outStrides = rowMajor(outShape)
         transform(sequence(lit(0), lit(outShape.product - 1)), k =>
           col("data")(outShape.indices.map(d =>
             (fdiv(k, outStrides(d)) % outShape(d)) * lit(outSrcStrides(d)))
@@ -1095,8 +1054,8 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * S, a chunk's leading S-r planes land in grid neighbor p+q at axis
     * offset r and its trailing r planes in p+q+1 at offset 0 (mod the
     * chunk count), so one groupBy assembles each destination chunk from
-    * exactly two messages — the [[stencilAxis]] halo-message machinery
-    * with the whole payload riding it. A chunk-aligned shift (r = 0)
+    * exactly two messages — the [[Halo]] exchange with the whole
+    * payload riding it. A chunk-aligned shift (r = 0)
     * degenerates to a single full-payload message — pure re-addressing.
     * Absent source chunks contribute implicit zeros (the stencil
     * convention). Dtype-preserving. */
@@ -1111,54 +1070,31 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     val cA = geom.chunksPerDim(axis)
     val q = k / sA
     val r = k % sA
-    val strides = shape.scanRight(1)(_ * _).tail
-    val strideA = strides(axis)
     val elems = geom.chunkElems
-    val slabElems = elems / sA
     val zeroE = lit(0).cast(dtype)
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
-    val rem = shape.indices.filterNot(_ == axis)
-    val remSlab = rem.zip(rem.map(shape).scanRight(1)(_ * _).tail)
-    // `cnt` axis planes starting at coord `start`, plane-major then
-    // row-major over the remaining dims ([[stencilAxis]]'s slab layout)
-    def slab(start: Int, cnt: Int): Column =
-      transform(sequence(lit(0), lit(cnt * slabElems - 1)), s => {
-        val p = fdiv(s, slabElems)
-        val flat = remSlab.map { case (j, ss) =>
-          (fdiv(s % slabElems, ss) % shape(j)) * strides(j)
-        }.foldLeft((lit(start) + p) * strideA: Column)(_ + _)
-        col("data")(flat)
-      })
-    def msg(destOff: Int, kind: String, strip: Column): Column = struct(
-      array(shape.indices.map(d =>
-        if (d == axis) ((col("pos")(d) + lit(destOff)) % lit(cA)).cast("int")
-        else col("pos")(d).cast("int")): _*).as("tpos"),
-      lit(kind).as("kind"), strip.as("strip"))
+    val (extA, extB) = (shape.updated(axis, sA - r), shape.updated(axis, r))
+    def on(i: Int) = Seq.tabulate(n)(d => if (d == axis) i else 0)
+    def wrapped(off: Int) = {
+      val t = Halo.shifted(on(off))
+      t.updated(axis, t(axis) % lit(cA))
+    }
+    // leading planes -> offset r of p+q, trailing planes -> offset 0 of p+q+1
     val msgs =
-      if (r == 0) Seq(msg(q, "a", col("data")))
+      if (r == 0) Seq(Halo.msg(wrapped(q), "a", col("data")))
       else Seq(
-        msg(q, "a", slab(0, sA - r)), // leading planes -> offset r
-        msg(q + 1, "b", slab(sA - r, r))) // trailing planes -> offset 0
-    val sent = df
-      .select(col("timestep"), col("pos"), explode(array(msgs: _*)).as("m"))
-      .select(col("timestep"), col("m.tpos").as("tpos"),
-        col("m.kind").as("kind"), col("m.strip").as("strip"))
-    val assembled = sent
-      .groupBy(col("timestep"), col("tpos"))
-      .agg(map_from_entries(collect_list(struct(col("kind"), col("strip")))).as("m"))
+        Halo.msg(wrapped(q), "a", Halo.box(shape, on(0), extA)),
+        Halo.msg(wrapped(q + 1), "b", Halo.box(shape, on(sA - r), extB)))
+    val assembled = Halo.assemble(Halo.messages(df, Seq("timestep"), msgs, grid = Nil))
     val outData =
       if (r == 0) coalesce(element_at(col("m"), "a"), array_repeat(zeroE, elems))
       else transform(sequence(lit(0), lit(elems - 1)), idx => {
-        val cd = fdiv(idx, strideA) % sA
-        val slabI = remSlab.map { case (j, ss) =>
-          (fdiv(idx, strides(j)) % shape(j)) * lit(ss)
-        }.reduceOption[Column](_ + _).getOrElse(lit(0): Column)
+        val c = Halo.coordsOf(idx, shape)
+        val cd = c(axis)
         coalesce(
           when(cd >= r,
-            element_at(element_at(col("m"), "a"), (cd - r) * slabElems + slabI + 1))
+            element_at(element_at(col("m"), "a"), Halo.boxIndex(c.updated(axis, cd - r), extA) + 1))
             .otherwise(
-              element_at(element_at(col("m"), "b"), cd * slabElems + slabI + 1)),
+              element_at(element_at(col("m"), "b"), Halo.boxIndex(c, extB) + 1)),
           zeroE)
       })
     copy(df = assembled.select(col("timestep"), col("tpos").as("pos"),
@@ -1171,9 +1107,10 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * fills new cells with `value` (numpy's default); `mode = "edge"`
     * replicates the nearest boundary plane (`value` is ignored). The
     * padded extent must tile the chunk shape (pad to a chunk multiple —
-    * the regular-grid contract every other face assumes). Payload moves exactly as [[roll]]: at most two slab
-    * messages per source chunk land at the `before`-shifted grid
-    * coordinates, one groupBy assembles; destination positions nothing
+    * the regular-grid contract every other face assumes). Payload
+    * moves exactly as [[roll]]: at most two box messages per source
+    * chunk land at the `before`-shifted grid coordinates, and the
+    * [[Halo]] assembly groups them with the seed rows below; destination positions nothing
     * covers — pure pad chunks and the uncovered planes of boundary
     * chunks — fill with `value`: pure-pad positions are SEEDED by the
     * axis-boundary source chunks (the pos==0 chunk line emits the
@@ -1199,39 +1136,18 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     val newCA = (before + size + after) / sA
     val q = before / sA
     val r = before % sA
-    val strides = shape.scanRight(1)(_ * _).tail
-    val strideA = strides(axis)
     val elems = geom.chunkElems
-    val slabElems = elems / sA
     val padE = lit(value).cast(dtype)
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
-    val rem = shape.indices.filterNot(_ == axis)
-    val remSlab = rem.zip(rem.map(shape).scanRight(1)(_ * _).tail)
-    def slab(start: Int, cnt: Int): Column =
-      transform(sequence(lit(0), lit(cnt * slabElems - 1)), s => {
-        val p = fdiv(s, slabElems)
-        val flat = remSlab.map { case (j, ss) =>
-          (fdiv(s % slabElems, ss) % shape(j)) * strides(j)
-        }.foldLeft((lit(start) + p) * strideA: Column)(_ + _)
-        col("data")(flat)
-      })
-    def msg(destOff: Int, kind: String, strip: Column): Column = struct(
-      array(shape.indices.map(d =>
-        if (d == axis) (col("pos")(d) + lit(destOff)).cast("int")
-        else col("pos")(d).cast("int")): _*).as("tpos"),
-      lit(kind).as("kind"), strip.as("strip"))
+    val (extA, extB, extPlane) =
+      (shape.updated(axis, sA - r), shape.updated(axis, r), shape.updated(axis, 1))
+    def on(i: Int) = Seq.tabulate(n)(d => if (d == axis) i else 0)
+    // leading planes -> offset r of p+q, trailing planes -> offset 0 of p+q+1
     val msgs =
-      if (r == 0) Seq(msg(q, "a", col("data")))
+      if (r == 0) Seq(Halo.msg(Halo.shifted(on(q)), "a", col("data")))
       else Seq(
-        msg(q, "a", slab(0, sA - r)), // leading planes -> offset r
-        msg(q + 1, "b", slab(sA - r, r))) // trailing planes -> offset 0
+        Halo.msg(Halo.shifted(on(q)), "a", Halo.box(shape, on(0), extA)),
+        Halo.msg(Halo.shifted(on(q + 1)), "b", Halo.box(shape, on(sA - r), extB)))
     val stripT = ArrayType(dtype)
-    val sent = df
-      .select(col("timestep"), col("pos"), explode(array(msgs: _*)).as("m"))
-      .select(col("timestep"), col("m.tpos").as("tpos"),
-        col("m.kind").as("kind"), col("m.strip").cast(stripT).as("strip"))
-      .filter(col("tpos")(axis) >= 0 && col("tpos")(axis) < newCA)
     // seed the pure-pad destination positions so they exist in the
     // output: each axis-BOUNDARY source chunk emits the pad rows of its
     // own grid column (low edge -> below-pad, high edge -> above-pad) —
@@ -1240,7 +1156,7 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     // chunk's edge PLANE (the boundary chunk is already in hand), so
     // pad planes replicate it; constant mode ships no payload.
     // Partially covered boundary chunks need no seed: they already
-    // receive a slab message and coalesce the uncovered planes.
+    // receive a box message and coalesce the uncovered planes.
     val cAOld = geom.chunksPerDim(axis)
     val dims = geom.chunksPerDim.updated(axis, newCA)
     val lowPads = 0 until q
@@ -1254,27 +1170,26 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
             if (d == axis) col("a").cast("int")
             else col("pos")(d).cast("int")): _*).as("tpos"),
           lit(kind).as("kind"),
-          (if (mode == "edge") slab(if (kind == "sl") 0 else sA - 1, 1)
+          (if (mode == "edge") Halo.box(shape, on(if (kind == "sl") 0 else sA - 1), extPlane)
            else lit(null)).cast(stripT).as("strip"))
     val seeds = Seq((0, lowPads, "sl"), (cAOld - 1, highPads, "sh"))
       .filter(_._2.nonEmpty).map { case (e, p, k) => seedRows(e, p, k) }
-    val assembled = (sent +: seeds).reduce(_ unionByName _)
-      .groupBy(col("timestep"), col("tpos"))
-      .agg(map_from_entries(collect_list(struct(col("kind"), col("strip")))).as("m"))
+    val assembled = Halo.assemble(
+      (Halo.messages(df, Seq("timestep"), msgs, dims) +: seeds).reduce(_ unionByName _))
     def el(kind: String, i: Column): Column =
       element_at(element_at(col("m"), kind), i + 1)
     val outData =
       if (mode == "constant" && r == 0)
         coalesce(element_at(col("m"), "a"), array_repeat(padE, elems))
       else transform(sequence(lit(0), lit(elems - 1)), idx => {
-        val cd = fdiv(idx, strideA) % sA
-        val slabI = remSlab.map { case (j, ss2) =>
-          (fdiv(idx, strides(j)) % shape(j)) * lit(ss2)
-        }.reduceOption[Column](_ + _).getOrElse(lit(0): Column)
+        val c = Halo.coordsOf(idx, shape)
+        val cd = c(axis)
+        // box-local index of plane `p` of a box of extents `ext`
+        def at(p: Column, ext: Seq[Int]) = Halo.boxIndex(c.updated(axis, p), ext)
         val regular =
           if (r == 0) el("a", idx)
-          else when(cd >= r, el("a", (cd - r) * slabElems + slabI))
-            .otherwise(el("b", cd * slabElems + slabI))
+          else when(cd >= r, el("a", at(cd - r, extA)))
+            .otherwise(el("b", at(cd, extB)))
         // uncovered planes (absent strip or absent message) are pad. In
         // edge mode the candidates are mutually exclusive per chunk: a
         // chunk holding only "a" is the FIRST covered one (uncovered =
@@ -1283,9 +1198,9 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
         // chunks hold exactly one seeded edge plane.
         val fallback =
           if (mode == "constant") Seq(padE)
-          else Seq(el("a", slabI)) ++
-            (if (r > 0) Seq(el("b", slabI + (r - 1) * slabElems)) else Nil) ++
-            Seq(el("sl", slabI), el("sh", slabI))
+          else Seq(el("a", at(lit(0), if (r == 0) shape else extA))) ++
+            (if (r > 0) Seq(el("b", at(lit(r - 1), extB))) else Nil) ++
+            Seq(el("sl", at(lit(0), extPlane)), el("sh", at(lit(0), extPlane)))
         coalesce(regular +: fallback: _*)
       })
     ChunkedArray(
@@ -1347,8 +1262,8 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     def idiv(c: Column, s: Int): Column =
       if (s == 1) c else floor(c / lit(s)).cast("int")
     // row-major strides, old and new
-    val strides = geom.chunkShape.scanRight(1)(_ * _).tail
-    val newStrides = newShape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
+    val newStrides = rowMajor(newShape)
     val cells = df.select(col("timestep"), col("pos"),
       posexplode(col("data")).as(Seq("i", "v")))
     // global coord per dim, then new pos / new row-major offset
@@ -1397,14 +1312,12 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
         s"dim $d: new chunk size ${newChunkShape(d)} must tile ${newShape(d)}")
       newShape(d) / newChunkShape(d)
     }
-    val strides = geom.chunkShape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     // global row-major strides over the OLD and NEW dims (long: flat
     // indices overflow int far below the target scale)
-    val dimStrides = oldDims.map(_.toLong).scanRight(1L)(_ * _).tail
-    val newDimStrides = newShape.map(_.toLong).scanRight(1L)(_ * _).tail
-    val newChunkStrides = newChunkShape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val dimStrides = geom.globalStrides
+    val newDimStrides = ArrayGeometry(newCpd, newChunkShape).globalStrides
+    val newChunkStrides = rowMajor(newChunkShape)
     def ldiv(a: Column, s: Long): Column =
       if (s == 1L) a else floor(a / lit(s)).cast("bigint")
     val cells = df.select(col("timestep"), col("pos"),
@@ -1481,13 +1394,11 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
       }
     val g = aligned.geom
     val shape = g.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = g.strides
     val oShape = shape.zip(factors).map { case (s, f) => s / f }
-    val oStrides = oShape.scanRight(1)(_ * _).tail
-    val fStrides = factors.scanRight(1)(_ * _).tail
+    val oStrides = rowMajor(oShape)
+    val fStrides = rowMajor(factors)
     val blockElems = factors.product
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
     def cellAt(s: Column, kb: Int): Column = {
       val idx = (0 until geom.dims).map { d =>
         val bo = fdiv(s, oStrides(d)) % oShape(d)
@@ -1831,7 +1742,7 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
   private def argExtremeNd(isMax: Boolean, valName: String): DataFrame = {
     val shape = geom.chunkShape
     val gdims = (0 until geom.dims).map(geom.dimSize)
-    val gstrides = gdims.map(_.toLong).scanRight(1L)(_ * _).tail
+    val gstrides = geom.globalStrides
     // the tie key k: for max the NEGATED flat index (struct max = highest
     // value, ties -> highest k = lowest index); for min the flat index
     // itself (struct min = lowest value, ties -> lowest k = lowest index)
@@ -1868,10 +1779,9 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * equivalence reference for the native [[org.apache.spark.sql.graftexpr.ChunkArgExtreme]]. */
   private[graft] def catalystArgFoldNd(isMax: Boolean): Column = {
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val gdims = (0 until geom.dims).map(geom.dimSize)
-    val gstrides = gdims.map(_.toLong).scanRight(1L)(_ * _).tail
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val gstrides = geom.globalStrides
     val seedK = if (isMax) Long.MinValue else Long.MaxValue
     aggregate(
       transform(sequence(lit(0), lit(geom.chunkElems - 1)), i => {
@@ -1928,7 +1838,7 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     // (sequence(1, 0) == [1, 0]) and gather garbage rather than nothing
     ranges.foreach { case (lo, hi) => require(lo < hi, s"empty slice [$lo, $hi)") }
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val chunkLo = shape.indices.map(d => col("pos")(d) * shape(d))
     val kept = df.filter(ranges.zipWithIndex.map { case ((lo, hi), d) =>
       chunkLo(d) < hi && chunkLo(d) + shape(d) > lo
@@ -1964,98 +1874,64 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * global boundary — the canonical in-situ simulation analytic
     * (time/space derivatives over the streamed array; doreisa arrays are
     * arbitrary-rank, doreisa/head_node.py:49-58). Distributed via halo
-    * exchange: every chunk ships only its 2N boundary FACES to grid
+    * exchange ([[Halo.laplacianMessages]]): every chunk ships only its
+    * 2N boundary FACES to grid
     * neighbors (O(surface) shuffle, never O(volume) beyond the self
     * payload's own re-group), then each chunk computes locally from its
     * payload plus received halos — the Spark-first form of dask
     * `map_overlap`. Halo zero-fills are cast to [[dtype]], so
     * float32/int payloads are not widened. */
-  def stencilLaplacian(native: Boolean = true): ChunkedArray = {
-    val n = geom.dims
-    val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
-    val elems = geom.chunkElems
-    val zeroE = lit(0).cast(dtype)
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
-    // dims remaining when dim d is fixed, with their row-major strides
-    // inside the extracted face slab
-    def remWithSlabStrides(d: Int): Seq[(Int, Int)] = {
-      val rem = shape.indices.filterNot(_ == d)
-      rem.zip(rem.map(shape).scanRight(1)(_ * _).tail)
-    }
-    // face of this chunk at local coord_d == fixed, row-major over the
-    // remaining dims — the only payload bytes that ever shuffle
-    def face(d: Int, fixed: Int): Column = {
-      val rem = remWithSlabStrides(d)
-      transform(sequence(lit(0), lit(elems / shape(d) - 1)), s => {
-        val flat = rem.map { case (j, ss) => (fdiv(s, ss) % shape(j)) * strides(j) }
-          .foldLeft(lit(fixed * strides(d)): Column)(_ + _)
-        col("data")(flat)
-      })
-    }
-    // messages: full payload to self + one face to each of the 2N neighbors
-    def msg(off: Seq[Int], kind: String, strip: Column): Column = struct(
-      array(off.zipWithIndex.map { case (o, d) => (col("pos")(d) + lit(o)).cast("int") }: _*).as("tpos"),
-      lit(kind).as("kind"), strip.as("strip"))
-    val msgs = msg(Seq.fill(n)(0), "c", col("data")) +:
-      (0 until n).flatMap { d =>
-        val e = (s: Int) => Seq.tabulate(n)(j => if (j == d) s else 0)
-        Seq(
-          msg(e(+1), s"l$d", face(d, shape(d) - 1)), // receiver's low-side halo
-          msg(e(-1), s"h$d", face(d, 0))) // receiver's high-side halo
-      }
-    val sent = df
-      .select(col("timestep"), explode(array(msgs: _*)).as("m"))
-      .select(col("timestep"), col("m.tpos").as("tpos"),
-        col("m.kind").as("kind"), col("m.strip").as("strip"))
-      .filter((0 until n).map(d =>
-        col("tpos")(d) >= 0 && col("tpos")(d) < geom.chunksPerDim(d)).reduce(_ && _))
-    val assembled = sent
-      .groupBy(col("timestep"), col("tpos"))
-      .agg(map_from_entries(collect_list(struct(col("kind"), col("strip")))).as("m"))
+  def stencilLaplacian(): ChunkedArray =
     // Double payloads take the native Laplacian kernel: ONE compiled JVM
     // call per chunk instead of the interpreted per-cell case chain (the
-    // arr_stencil_3d precedent, ~10x); the kernel replays this
+    // arr_stencil_3d precedent, ~10x); the kernel replays the Catalyst
     // projection's exact read logic AND fold association (the Laplacian
     // fold is not a dense-kernel row-major fold, so StencilConvolve
-    // can't host it bit-exactly). Other dtypes keep the Catalyst path
-    // below (dtype preservation). Equivalence gated in StencilKernelSpec.
-    if (native && dtype == org.apache.spark.sql.types.DoubleType) {
-      val data = org.apache.spark.sql.graftexpr.StencilExpressions.stencilLaplacian(
-        col("m"), col("tpos"), shape, geom.chunksPerDim)
-      return copy(df = assembled.select(
-        col("timestep"), col("tpos").as("pos"), data.as("data")))
-    }
-    val out = assembled.select(
-      col("timestep"), col("tpos").as("pos"),
-      transform(sequence(lit(0), lit(elems - 1)), idx => {
-        // A grid position can exist only as a halo target (its own chunk
-        // missing = implicitly all-zero); treat the absent payload as 0s.
-        val self = coalesce(element_at(col("m"), "c"), array_repeat(zeroE, elems))
-        val center = element_at(self, idx + 1)
-        val neighborSum = (0 until n).flatMap { d =>
-          val cd = fdiv(idx, strides(d)) % shape(d)
-          // idx's position inside the face slab of dim d
-          val slabI = remWithSlabStrides(d)
-            .map { case (j, ss) => (fdiv(idx, strides(j)) % shape(j)) * lit(ss) }
-            .reduceOption[Column](_ + _).getOrElse(lit(0))
-          val lo = when(cd > 0, element_at(self, idx - strides(d) + 1))
-            .otherwise(coalesce(element_at(element_at(col("m"), s"l$d"), slabI + 1), zeroE))
-          val hi = when(cd < shape(d) - 1, element_at(self, idx + strides(d) + 1))
-            .otherwise(coalesce(element_at(element_at(col("m"), s"h$d"), slabI + 1), zeroE))
-          Seq(lo, hi)
-        }.reduce(_ + _)
-        (center * lit(2 * n) - neighborSum).cast(dtype)
-      }).as("data"))
-    copy(df = out)
+    // can't host it bit-exactly). Equivalence gated in StencilKernelSpec.
+    if (dtype == org.apache.spark.sql.types.DoubleType)
+      overHalo(laplacianHalo, org.apache.spark.sql.graftexpr.StencilExpressions.stencilLaplacian(
+        col("m"), col("tpos"), geom.chunkShape, geom.chunksPerDim))
+    else catalystStencilLaplacian()
+
+  private def laplacianHalo: DataFrame = Halo.assemble(Halo.messages(
+    df, Seq("timestep"), Halo.laplacianMessages(geom.chunkShape), geom.chunksPerDim))
+
+  /** An assembled halo's `(timestep, tpos)` rows as chunks of `data`. */
+  private def overHalo(assembled: DataFrame, data: Column): ChunkedArray =
+    copy(df = assembled.select(col("timestep"), col("tpos").as("pos"), data.as("data")))
+
+  /** The interpreted Laplacian fold — [[stencilLaplacian]]'s path for
+    * non-double dtypes, and StencilKernelSpec's reference for the native
+    * kernel. */
+  private[graft] def catalystStencilLaplacian(): ChunkedArray = {
+    val n = geom.dims
+    val shape = geom.chunkShape
+    val strides = geom.strides
+    val elems = geom.chunkElems
+    val zeroE = lit(0).cast(dtype)
+    overHalo(laplacianHalo, transform(sequence(lit(0), lit(elems - 1)), idx => {
+      // A grid position can exist only as a halo target (its own chunk
+      // missing = implicitly all-zero); treat the absent payload as 0s.
+      val self = coalesce(element_at(col("m"), Halo.Core), array_repeat(zeroE, elems))
+      val center = element_at(self, idx + 1)
+      val c = Halo.coordsOf(idx, shape)
+      val neighborSum = (0 until n).flatMap { d =>
+        val faceI = c.zip(Halo.faceStrides(shape, d)).map { case (cj, s) => cj * s }.reduce(_ + _)
+        val lo = when(c(d) > 0, element_at(self, idx - strides(d) + 1))
+          .otherwise(coalesce(element_at(element_at(col("m"), Halo.lowFace(d)), faceI + 1), zeroE))
+        val hi = when(c(d) < shape(d) - 1, element_at(self, idx + strides(d) + 1))
+          .otherwise(coalesce(element_at(element_at(col("m"), Halo.highFace(d)), faceI + 1), zeroE))
+        Seq(lo, hi)
+      }.reduce(_ + _)
+      (center * lit(2 * n) - neighborSum).cast(dtype)
+    }))
   }
 
   /** Generalized 1-d stencil along `axis` — dask `map_overlap(depth,
     * boundary)` for an axis-directed kernel: `out[x] = Σ_k weights(k+r)
     * * v[x + k·e_axis]`, k ∈ [-r, r], r = depth = weights.length / 2.
-    * [[stencilLaplacian]]'s halo machinery with the parameters exposed:
-    * each chunk ships only its two r-deep boundary SLABS along the axis
+    * [[stencilNd]]'s halo with the kernel along one axis: each chunk
+    * ships only its two r-deep boundary SLABS along the axis
     * (O(surface · depth) shuffle, never O(volume) beyond the self
     * payload's own re-group), then computes locally. Boundary modes at
     * the GLOBAL edge: `"zero"` pads with 0; `"reflect"` mirrors without
@@ -2069,115 +1945,82 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * interior chunks are implicitly all-zero (the Laplacian's
     * convention). Requires depth < chunkShape(axis), so ±1 grid
     * neighbors cover the reach. */
-  def stencilAxis(axis: Int, weights: Seq[Double], boundary: String = "zero",
-      native: Boolean = true): ChunkedArray = {
-    val n = geom.dims
-    require(axis >= 0 && axis < n, s"axis $axis out of range")
+  def stencilAxis(axis: Int, weights: Seq[Double], boundary: String = "zero"): ChunkedArray =
+    // A 1-d axis kernel IS a hypercube kernel with extent 1 on every
+    // other axis: double payloads route through [[stencilNd]]'s native
+    // StencilConvolve (one compiled call per chunk; same halo; same
+    // increasing-k fold order and boundary semantics, so bit-identical —
+    // spec-gated in StencilKernelSpec). Other dtypes keep the
+    // interpreted per-cell path (dtype preservation); so does the
+    // "linear" boundary (the native kernel covers zero|reflect).
+    if (boundary != "linear" && dtype == org.apache.spark.sql.types.DoubleType)
+      stencilNd(weights, axisKernelShape(axis, weights, boundary), boundary)
+    else catalystStencilAxis(axis, weights, boundary)
+
+  /** [[stencilAxis]]'s kernel as a hypercube: extent 1 off `axis`. */
+  private def axisKernelShape(axis: Int, weights: Seq[Double], boundary: String): Seq[Int] = {
+    require(axis >= 0 && axis < geom.dims, s"axis $axis out of range")
     require(weights.length % 2 == 1 && weights.length >= 3,
       s"weights must have odd length >= 3, got ${weights.length}")
     require(boundary == "zero" || boundary == "reflect" || boundary == "linear",
       s"boundary must be zero|reflect|linear, got $boundary")
-    // A 1-d axis kernel IS a hypercube kernel with extent 1 on every
-    // other axis: double payloads route through [[stencilNd]]'s native
-    // StencilConvolve (one compiled call per chunk; same halo volume —
-    // with reach 0 off-axis it ships exactly the two r-deep slabs; same
-    // increasing-k fold order and boundary semantics, so bit-identical —
-    // spec-gated in StencilKernelSpec). Other dtypes keep the
-    // interpreted per-cell path below (dtype preservation); so does the
-    // "linear" boundary (the native kernel covers zero|reflect).
-    if (native && boundary != "linear" &&
-        dtype == org.apache.spark.sql.types.DoubleType)
-      return stencilNd(weights,
-        Seq.tabulate(n)(d => if (d == axis) weights.length else 1), boundary)
-    val r = weights.length / 2
+    Seq.tabulate(geom.dims)(d => if (d == axis) weights.length else 1)
+  }
+
+  /** The interpreted axis-stencil fold — [[stencilAxis]]'s path for
+    * non-double dtypes and the `"linear"` boundary, and
+    * StencilKernelSpec's reference for the native route. */
+  private[graft] def catalystStencilAxis(axis: Int, weights: Seq[Double],
+      boundary: String): ChunkedArray = {
+    val reach = axisKernelShape(axis, weights, boundary).map(_ / 2)
+    val r = reach(axis)
     val shape = geom.chunkShape
     val shapeA = shape(axis)
     require(r < shapeA, s"depth $r must be < chunk extent $shapeA on axis $axis")
-    val strides = shape.scanRight(1)(_ * _).tail
-    val strideA = strides(axis)
+    val strideA = geom.strides(axis)
     val elems = geom.chunkElems
-    val slabElems = elems / shapeA
     val zeroE = lit(0).cast(dtype)
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
-    val rem = shape.indices.filterNot(_ == axis)
-    val remSlab = rem.zip(rem.map(shape).scanRight(1)(_ * _).tail)
-    // r planes starting at axis coord `start`, plane-major then row-major
-    // over the remaining dims — the only payload bytes that shuffle
-    def slab(start: Int): Column =
-      transform(sequence(lit(0), lit(r * slabElems - 1)), s => {
-        val p = fdiv(s, slabElems)
-        val flat = remSlab.map { case (j, ss) =>
-          (fdiv(s % slabElems, ss) % shape(j)) * strides(j)
-        }.foldLeft((lit(start) + p) * strideA: Column)(_ + _)
-        col("data")(flat)
-      })
-    def msg(off: Int, kind: String, strip: Column): Column = struct(
-      array(shape.indices.map(d =>
-        (col("pos")(d) + lit(if (d == axis) off else 0)).cast("int")): _*).as("tpos"),
-      lit(kind).as("kind"), strip.as("strip"))
-    val msgs = Seq(
-      msg(0, "c", col("data")),
-      msg(+1, "l", slab(shapeA - r)), // receiver's low-side halo
-      msg(-1, "h", slab(0))) // receiver's high-side halo
-    val sent = df
-      .select(col("timestep"), col("pos"), explode(array(msgs: _*)).as("msg"))
-      .select(col("timestep"), col("msg.tpos").as("tpos"),
-        col("msg.kind").as("kind"), col("msg.strip").as("strip"))
-      .filter(shape.indices.map(d =>
-        col("tpos")(d) >= 0 && col("tpos")(d) < geom.chunksPerDim(d)).reduce(_ && _))
-    val assembled = sent
-      .groupBy(col("timestep"), col("tpos"))
-      .agg(map_from_entries(collect_list(struct(col("kind"), col("strip")))).as("m"))
     val lastPos = geom.chunksPerDim(axis) - 1
-    val out = assembled.select(
-      col("timestep"), col("tpos").as("pos"),
-      transform(sequence(lit(0), lit(elems - 1)), idx => {
-        val self = coalesce(element_at(col("m"), "c"), array_repeat(zeroE, elems))
-        val cd = fdiv(idx, strideA) % shapeA
-        val baseIdx = idx - cd * strideA // idx with axis coord 0
-        val slabI = remSlab.map { case (j, ss) =>
-          (fdiv(idx, strides(j)) % shape(j)) * lit(ss)
-        }.reduceOption[Column](_ + _).getOrElse(lit(0))
-        // v at axis offset o, out-of-chunk reads from the halo slabs,
-        // out-of-GLOBAL reads by boundary mode
-        def v(o: Int): Column = {
-          val target = cd + lit(o)
-          val inSelf = element_at(self, idx + o * strideA + 1)
-          val fromLow = coalesce(
-            element_at(element_at(col("m"), "l"), (target + r) * slabElems + slabI + 1),
-            zeroE)
-          val fromHigh = coalesce(
-            element_at(element_at(col("m"), "h"), (target - shapeA) * slabElems + slabI + 1),
-            zeroE)
-          val atLowEdge = boundary match {
-            case "zero" => zeroE
-            case "reflect" => element_at(self, baseIdx - target * strideA + 1) // coord -target
-            case _ => // linear: 2·f[0] - f[-target]
-              (lit(2.0).cast(dtype) * element_at(self, baseIdx + 1)).cast(dtype) -
-                element_at(self, baseIdx - target * strideA + 1)
-          }
-          val atHighEdge = boundary match {
-            case "zero" => zeroE
-            case "reflect" =>
-              element_at(self, baseIdx + (lit(2 * (shapeA - 1)) - target) * strideA + 1)
-            case _ => // linear: 2·f[n-1] - f[2(n-1) - target]
-              (lit(2.0).cast(dtype) *
-                element_at(self, baseIdx + lit((shapeA - 1) * strideA) + 1)).cast(dtype) -
-                element_at(self, baseIdx + (lit(2 * (shapeA - 1)) - target) * strideA + 1)
-          }
-          // NB: `tpos`, not the output alias `pos` — a lateral column
-          // alias in the same select list would shadow the input column
-          when(target >= 0 && target < shapeA, inSelf)
-            .when(target < 0,
-              when(col("tpos")(axis) === 0, atLowEdge).otherwise(fromLow))
-            .otherwise(
-              when(col("tpos")(axis) === lastPos, atHighEdge).otherwise(fromHigh))
+    def along(s: Int) = Seq.tabulate(geom.dims)(d => if (d == axis) s else 0)
+    overHalo(neighborhoodHalo(reach), transform(sequence(lit(0), lit(elems - 1)), idx => {
+      val self = coalesce(element_at(col("m"), Halo.Core), array_repeat(zeroE, elems))
+      val c = Halo.coordsOf(idx, shape)
+      val cd = c(axis)
+      val baseIdx = idx - cd * strideA // idx with axis coord 0
+      // v at axis offset o, out-of-chunk reads from the halo slabs,
+      // out-of-GLOBAL reads by boundary mode
+      def v(o: Int): Column = {
+        val target = cd + lit(o)
+        val inSelf = element_at(self, idx + o * strideA + 1)
+        val fromLow = Halo.neighborAt(shape, reach, along(-1), c.updated(axis, target), zeroE)
+        val fromHigh = Halo.neighborAt(shape, reach, along(+1), c.updated(axis, target), zeroE)
+        val atLowEdge = boundary match {
+          case "zero" => zeroE
+          case "reflect" => element_at(self, baseIdx - target * strideA + 1) // coord -target
+          case _ => // linear: 2·f[0] - f[-target]
+            (lit(2.0).cast(dtype) * element_at(self, baseIdx + 1)).cast(dtype) -
+              element_at(self, baseIdx - target * strideA + 1)
         }
-        weights.indices.map(k => lit(weights(k)) * v(k - r))
-          .reduce(_ + _).cast(dtype)
-      }).as("data"))
-    copy(df = out)
+        val atHighEdge = boundary match {
+          case "zero" => zeroE
+          case "reflect" =>
+            element_at(self, baseIdx + (lit(2 * (shapeA - 1)) - target) * strideA + 1)
+          case _ => // linear: 2·f[n-1] - f[2(n-1) - target]
+            (lit(2.0).cast(dtype) *
+              element_at(self, baseIdx + lit((shapeA - 1) * strideA) + 1)).cast(dtype) -
+              element_at(self, baseIdx + (lit(2 * (shapeA - 1)) - target) * strideA + 1)
+        }
+        // NB: `tpos`, not the output alias `pos` — a lateral column
+        // alias in the same select list would shadow the input column
+        when(target >= 0 && target < shapeA, inSelf)
+          .when(target < 0,
+            when(col("tpos")(axis) === 0, atLowEdge).otherwise(fromLow))
+          .otherwise(
+            when(col("tpos")(axis) === lastPos, atHighEdge).otherwise(fromHigh))
+      }
+      weights.indices.map(k => lit(weights(k)) * v(k - r))
+        .reduce(_ + _).cast(dtype)
+    }))
   }
 
   /** numpy/dask `gradient(arr, axis=)` — second-order central
@@ -2201,9 +2044,8 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * can't express: `out[x⃗] = Σ_{k⃗} w[k⃗] · v[x⃗ + k⃗ - r⃗]` over a
     * row-major kernel of odd extents `kshape` (reach r⃗ = kshape/2).
     * Each chunk ships one sub-box to every grid neighbor its reach
-    * touches (3^N - 1 of them at full rank: faces, edges AND corners —
-    * each box is the intersection of last/first-r planes per axis), so
-    * the shuffle stays O(surface · depth), never O(volume) beyond the
+    * touches ([[Halo.neighborhoodMessages]]: faces, edges AND corners),
+    * so the shuffle stays O(surface · depth), never O(volume) beyond the
     * self payload's own re-group. Boundary modes at the GLOBAL edge per
     * axis: `"zero"` pads 0, `"reflect"` mirrors without repeating the
     * edge (numpy `pad(mode='reflect')`). The kernel fold is fixed
@@ -2211,14 +2053,22 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * bit-exact against a linearly-written oracle expression;
     * power-of-two weights make every product exact. Absent interior
     * chunks are implicitly all-zero. Requires r⃗ < chunkShape per axis
-    * so ±1 grid neighbors cover the reach.
-    *
-    * Codegen stays bounded: a tap with offset 0 on an axis resolves to
-    * ONE case there, and a nonzero offset to three (it can only exit
-    * the chunk on its own side), so a 3×3×3 kernel compiles to
-    * (1+2·3)^3 = 343 branches, not 27·5^3. */
-  def stencilNd(kernel: Seq[Double], kshape: Seq[Int], boundary: String = "zero",
-      native: Boolean = true): ChunkedArray = {
+    * so ±1 grid neighbors cover the reach. */
+  def stencilNd(kernel: Seq[Double], kshape: Seq[Int], boundary: String = "zero"): ChunkedArray =
+    // Double payloads take the native kernel: ONE compiled JVM call per
+    // chunk instead of the (1+2k)^N-branch Catalyst case chain
+    // interpreted per cell per tap inside `transform` (~20x on the
+    // rank-3 face; equivalence spec-gated in StencilKernelSpec). Other
+    // dtypes keep the Catalyst path (dtype preservation).
+    if (dtype == org.apache.spark.sql.types.DoubleType)
+      overHalo(neighborhoodHalo(kernelReach(kernel, kshape, boundary)),
+        org.apache.spark.sql.graftexpr.StencilExpressions.stencilConvolve(
+          col("m"), col("tpos"), geom.chunkShape, geom.chunksPerDim, kshape, kernel,
+          reflect = boundary == "reflect"))
+    else catalystStencilNd(kernel, kshape, boundary)
+
+  /** Validates a [[stencilNd]] kernel; its reach per axis. */
+  private def kernelReach(kernel: Seq[Double], kshape: Seq[Int], boundary: String): Seq[Int] = {
     val n = geom.dims
     require(kshape.length == n, s"kernel rank ${kshape.length} != array rank $n")
     require(kshape.forall(k => k % 2 == 1 && k >= 1),
@@ -2228,148 +2078,87 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     require(boundary == "zero" || boundary == "reflect",
       s"boundary must be zero|reflect, got $boundary")
     val r = kshape.map(_ / 2)
+    require(r.zip(geom.chunkShape).forall { case (rd, sd) => rd < sd },
+      s"kernel reach $r must be < chunk shape ${geom.chunkShape} per axis")
+    r
+  }
+
+  private def neighborhoodHalo(reach: Seq[Int]): DataFrame = Halo.assemble(Halo.messages(
+    df, Seq("timestep"), Halo.neighborhoodMessages(geom.chunkShape, reach), geom.chunksPerDim))
+
+  /** The interpreted hypercube-stencil fold — [[stencilNd]]'s path for
+    * non-double dtypes, and StencilKernelSpec's reference for the native
+    * StencilConvolve.
+    *
+    * Codegen stays bounded: a tap with offset 0 on an axis resolves to
+    * ONE case there, and a nonzero offset to three (it can only exit
+    * the chunk on its own side), so a 3×3×3 kernel compiles to
+    * (1+2·3)^3 = 343 branches, not 27·5^3. */
+  private[graft] def catalystStencilNd(kernel: Seq[Double], kshape: Seq[Int],
+      boundary: String): ChunkedArray = {
+    val n = geom.dims
+    val r = kernelReach(kernel, kshape, boundary)
     val shape = geom.chunkShape
-    require(r.zip(shape).forall { case (rd, sd) => rd < sd },
-      s"kernel reach $r must be < chunk shape $shape per axis")
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val elems = geom.chunkElems
     val zeroE = lit(0).cast(dtype)
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
-    def cart(dims: Seq[Int]): Seq[Seq[Int]] =
-      dims.foldLeft(Seq(Seq.empty[Int]))((acc, m) =>
-        acc.flatMap(p => (0 until m).map(p :+ _)))
-    // neighbor offsets the reach touches: nonzero components only on
-    // axes with reach > 0
-    val offs = cart(Seq.fill(n)(3)).map(_.map(_ - 1))
-      .filter(o => o.exists(_ != 0) &&
-        o.zipWithIndex.forall { case (od, d) => od == 0 || r(d) > 0 })
-    // sub-box (starts, extents) a sender ships toward offset o
-    def boxFor(o: Seq[Int]): (Seq[Int], Seq[Int]) = {
-      val se = o.zipWithIndex.map { case (od, d) =>
-        if (od > 0) (shape(d) - r(d), r(d))
-        else if (od < 0) (0, r(d))
-        else (0, shape(d))
-      }
-      (se.map(_._1), se.map(_._2))
-    }
-    def sub(starts: Seq[Int], exts: Seq[Int]): Column =
-      if (exts == shape) col("data")
-      else {
-        val bstr = exts.scanRight(1)(_ * _).tail
-        transform(sequence(lit(0), lit(exts.product - 1)), t =>
-          col("data")((0 until n).map { d =>
-            ((fdiv(t, bstr(d)) % exts(d)) + starts(d)) * strides(d)
-          }.reduce(_ + _)))
-      }
-    // kind = the SENDER's direction as seen from the receiver
-    def kindOf(src: Seq[Int]): String = "n" + src.mkString(",")
-    val selfMsg = struct(
-      array((0 until n).map(d => col("pos")(d).cast("int")): _*).as("tpos"),
-      lit("c").as("kind"), col("data").as("strip"))
-    val msgs = selfMsg +: offs.map { o =>
-      val (st, ex) = boxFor(o)
-      struct(
-        array(o.zipWithIndex.map { case (od, d) =>
-          (col("pos")(d) + od).cast("int") }: _*).as("tpos"),
-        lit(kindOf(o.map(-_))).as("kind"), sub(st, ex).as("strip"))
-    }
-    val sent = df
-      .select(col("timestep"), explode(array(msgs: _*)).as("m"))
-      .select(col("timestep"), col("m.tpos").as("tpos"),
-        col("m.kind").as("kind"), col("m.strip").as("strip"))
-      .filter((0 until n).map(d =>
-        col("tpos")(d) >= 0 && col("tpos")(d) < geom.chunksPerDim(d)).reduce(_ && _))
-    val assembled = sent
-      .groupBy(col("timestep"), col("tpos"))
-      .agg(map_from_entries(collect_list(struct(col("kind"), col("strip")))).as("m"))
     val lastPos = (0 until n).map(d => geom.chunksPerDim(d) - 1)
-    // Double payloads take the native kernel: ONE compiled JVM call per
-    // chunk instead of the (1+2k)^N-branch Catalyst case chain
-    // interpreted per cell per tap inside `transform` (~20x on the
-    // rank-3 face; equivalence spec-gated in StencilKernelSpec). Other
-    // dtypes keep the Catalyst path below (dtype preservation).
-    if (native && dtype == org.apache.spark.sql.types.DoubleType) {
-      val data = org.apache.spark.sql.graftexpr.StencilExpressions.stencilConvolve(
-        col("m"), col("tpos"), shape, geom.chunksPerDim, kshape, kernel,
-        reflect = boundary == "reflect")
-      return copy(df = assembled.select(
-        col("timestep"), col("tpos").as("pos"), data.as("data")))
-    }
     // kernel taps as offset vectors, row-major — the fold order
-    val taps = cart(kshape).map(_.zip(r).map { case (i, rd) => i - rd })
-    val out = assembled.select(
-      col("timestep"), col("tpos").as("pos"),
-      transform(sequence(lit(0), lit(elems - 1)), idx => {
-        val self = coalesce(element_at(col("m"), "c"), array_repeat(zeroE, elems))
-        val coords = (0 until n).map(d => fdiv(idx, strides(d)) % shape(d))
-        // per-axis resolution of target coord t = coord + ko into
-        // (guard, source region -1/0/+1 | None = zero-pad, effective
-        // coord), pruned by the tap's sign: ko == 0 never leaves the
-        // chunk; ko > 0 can only exit high; ko < 0 only low
-        def resolve(d: Int, ko: Int): Seq[(Column, Option[Int], Column)] = {
-          val t = coords(d) + lit(ko)
-          if (ko == 0) Seq((lit(true), Some(0), t))
-          else if (ko > 0) {
-            val highEdge =
-              if (boundary == "zero")
-                Seq(((t >= shape(d)) && (col("tpos")(d) === lastPos(d)), None, lit(0)))
-              else
-                Seq(((t >= shape(d)) && (col("tpos")(d) === lastPos(d)),
-                  Some(0), lit(2 * (shape(d) - 1)) - t))
-            Seq((t < shape(d), Some(0), t),
-              ((t >= shape(d)) && (col("tpos")(d) =!= lastPos(d)), Some(1), t)) ++ highEdge
-          } else {
-            val lowEdge =
-              if (boundary == "zero")
-                Seq(((t < 0) && (col("tpos")(d) === 0), None, lit(0)))
-              else
-                Seq(((t < 0) && (col("tpos")(d) === 0), Some(0), -t))
-            Seq((t >= 0, Some(0), t),
-              ((t < 0) && (col("tpos")(d) =!= 0), Some(-1), t)) ++ lowEdge
-          }
+    val taps = kshape.foldLeft(Seq(Seq.empty[Int]))((acc, m) =>
+      acc.flatMap(p => (0 until m).map(p :+ _))).map(_.zip(r).map { case (i, rd) => i - rd })
+    overHalo(neighborhoodHalo(r), transform(sequence(lit(0), lit(elems - 1)), idx => {
+      val self = coalesce(element_at(col("m"), Halo.Core), array_repeat(zeroE, elems))
+      val coords = Halo.coordsOf(idx, shape)
+      // per-axis resolution of target coord t = coord + ko into
+      // (guard, source region -1/0/+1 | None = zero-pad, effective
+      // coord), pruned by the tap's sign: ko == 0 never leaves the
+      // chunk; ko > 0 can only exit high; ko < 0 only low
+      def resolve(d: Int, ko: Int): Seq[(Column, Option[Int], Column)] = {
+        val t = coords(d) + lit(ko)
+        if (ko == 0) Seq((lit(true), Some(0), t))
+        else if (ko > 0) {
+          val highEdge =
+            if (boundary == "zero")
+              Seq(((t >= shape(d)) && (col("tpos")(d) === lastPos(d)), None, lit(0)))
+            else
+              Seq(((t >= shape(d)) && (col("tpos")(d) === lastPos(d)),
+                Some(0), lit(2 * (shape(d) - 1)) - t))
+          Seq((t < shape(d), Some(0), t),
+            ((t >= shape(d)) && (col("tpos")(d) =!= lastPos(d)), Some(1), t)) ++ highEdge
+        } else {
+          val lowEdge =
+            if (boundary == "zero")
+              Seq(((t < 0) && (col("tpos")(d) === 0), None, lit(0)))
+            else
+              Seq(((t < 0) && (col("tpos")(d) === 0), Some(0), -t))
+          Seq((t >= 0, Some(0), t),
+            ((t < 0) && (col("tpos")(d) =!= 0), Some(-1), t)) ++ lowEdge
         }
-        // read the value at source region src with effective coords
-        def read(src: Seq[Int], effs: Seq[Column]): Column =
-          if (src.forall(_ == 0))
-            element_at(self,
-              effs.zip(strides).map { case (e, s) => e * s }.reduce(_ + _) + 1)
-          else {
-            // the sender at direction src shipped toward offset -src:
-            // src = -1 (above) sent its LAST r planes -> box-local
-            // coord e + r; src = +1 sent its FIRST r -> e - shape
-            val (_, exts) = boxFor(src.map(-_))
-            val bstr = exts.scanRight(1)(_ * _).tail
-            val flat = (0 until n).map { d =>
-              val bl =
-                if (src(d) < 0) effs(d) + lit(r(d))
-                else if (src(d) > 0) effs(d) - lit(shape(d))
-                else effs(d)
-              bl * bstr(d)
-            }.reduce(_ + _)
-            // absent neighbor chunk = implicitly all-zero
-            coalesce(element_at(element_at(col("m"), kindOf(src)), flat + 1), zeroE)
+      }
+      // the value at source region src with effective coords
+      def read(src: Seq[Int], effs: Seq[Column]): Column =
+        if (src.forall(_ == 0))
+          element_at(self, effs.zip(strides).map { case (e, s) => e * s }.reduce(_ + _) + 1)
+        else Halo.neighborAt(shape, r, src, effs, zeroE) // absent neighbor = all-zero
+      def v(ko: Seq[Int]): Column = {
+        val cases = (0 until n).map(d => resolve(d, ko(d)))
+          .foldLeft(Seq((lit(true): Column, Seq.empty[Option[Int]], Seq.empty[Column]))) {
+            (acc, cs) =>
+              for ((c0, ss, es) <- acc; (c, s, e) <- cs)
+                yield (c0 && c, ss :+ s, es :+ e)
           }
-        def v(ko: Seq[Int]): Column = {
-          val cases = (0 until n).map(d => resolve(d, ko(d)))
-            .foldLeft(Seq((lit(true): Column, Seq.empty[Option[Int]], Seq.empty[Column]))) {
-              (acc, cs) =>
-                for ((c0, ss, es) <- acc; (c, s, e) <- cs)
-                  yield (c0 && c, ss :+ s, es :+ e)
-            }
-          val branches = cases.map { case (c, ss, es) =>
-            (c, if (ss.forall(_.isDefined)) read(ss.map(_.get), es) else zeroE)
-          }
-          branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
-            case (acc, (c, vv)) => acc.when(c, vv)
-          }.otherwise(zeroE) // unreachable: the regions partition the reach
+        val branches = cases.map { case (c, ss, es) =>
+          (c, if (ss.forall(_.isDefined)) read(ss.map(_.get), es) else zeroE)
         }
-        // fixed row-major kernel fold — the oracle writes the same
-        // terms linearly, so left-associative + replays bit-for-bit
-        taps.zipWithIndex.map { case (ko, ki) => lit(kernel(ki)) * v(ko) }
-          .reduce(_ + _).cast(dtype)
-      }).as("data"))
-    copy(df = out)
+        branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
+          case (acc, (c, vv)) => acc.when(c, vv)
+        }.otherwise(zeroE) // unreachable: the regions partition the reach
+      }
+      // fixed row-major kernel fold — the oracle writes the same
+      // terms linearly, so left-associative + replays bit-for-bit
+      taps.zipWithIndex.map { case (ko, ki) => lit(kernel(ki)) * v(ko) }
+        .reduce(_ + _).cast(dtype)
+    }))
   }
 
   /** Rank-2 convenience over [[stencilNd]]: `weights` as a row-major
@@ -2384,7 +2173,7 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * — global per-dimension indices, one row per element. */
   def rowsNd: DataFrame = {
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     df.select(col("timestep"), col("pos"),
         posexplode(col("data")).as(Seq("local", "value")))
       .select(col("timestep") +: shape.indices.map(d =>
@@ -2620,13 +2409,11 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     require(geom.dims >= 2, "axisSum needs rank >= 2; use sumPerTimestep for rank 1")
     require(axis >= 0 && axis < geom.dims, s"axis $axis out of range")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val rem = shape.indices.filterNot(_ == axis) // surviving dims
     val remShape = rem.map(shape)
     val outElems = remShape.product
-    val outStrides = remShape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val outStrides = rowMajor(remShape)
     // partial[s] = decimal sum over the reduced axis of the cells at
     // surviving-coord s (row-major over the remaining dims). Double
     // payloads take the native codegen'd line fold (AxisSumDec —
@@ -2668,13 +2455,11 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     require(geom.dims >= 2, "axisReduce needs rank >= 2")
     require(axis >= 0 && axis < geom.dims, s"axis $axis out of range")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val rem = shape.indices.filterNot(_ == axis)
     val remShape = rem.map(shape)
     val outElems = remShape.product
-    val outStrides = remShape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val outStrides = rowMajor(remShape)
     val partial = transform(sequence(lit(0), lit(outElems - 1)), s => {
       val base = rem.zip(outStrides).map { case (j, os) =>
         (fdiv(s, os) % shape(j)) * strides(j)
@@ -2751,13 +2536,11 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     require(geom.dims >= 2, "axisVar needs rank >= 2; use variancePerTimestep for rank 1")
     require(axis >= 0 && axis < geom.dims, s"axis $axis out of range")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val rem = shape.indices.filterNot(_ == axis)
     val remShape = rem.map(shape)
     val outElems = remShape.product
-    val outStrides = remShape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val outStrides = rowMajor(remShape)
     val d2 = (c: Column) => c.cast("decimal(18,2)")
     val zeroSq = lit(0).cast("decimal(38,4)")
     val zeroM = struct(zeroDec.as("t"), zeroSq.as("q"))
@@ -2826,13 +2609,11 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     require(geom.dims >= 2, "axisArg* needs rank >= 2; use argmaxNd/argminNd for the global probe")
     require(axis >= 0 && axis < geom.dims, s"axis $axis out of range")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val rem = shape.indices.filterNot(_ == axis)
     val remShape = rem.map(shape)
     val outElems = remShape.product
-    val outStrides = remShape.scanRight(1)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val outStrides = rowMajor(remShape)
     // one combine everywhere (within a chunk AND across chunks): better
     // value wins; equal value -> lower global axis coordinate wins; a
     // null challenger never wins, a null accumulator is replaced
@@ -2971,11 +2752,9 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
   def topkRows(k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val shape = geom.chunkShape
-    val strides = shape.scanRight(1)(_ * _).tail
+    val strides = geom.strides
     val gdims = (0 until geom.dims).map(geom.dimSize)
-    val gstrides = gdims.map(_.toLong).scanRight(1L)(_ * _).tail
-    // truncating div == floor for the non-negative indices used here
-    def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
+    val gstrides = geom.globalStrides
     // (-v, gidx) sorts ascending as (value desc, ties to lowest index);
     // double negation is exact, and -0.0/0.0 ties fall through to gidx
     val structs = transform(sequence(lit(0), lit(geom.chunkElems - 1)), i => {
@@ -3005,26 +2784,8 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * one window bounded to the per-timestep histogram and one
     * conditional MIN per quantile. `qs` maps output column name ->
     * fraction in (0, 1]. */
-  def quantilesPerTimestep(qs: Seq[(String, Double)]): DataFrame = {
-    require(qs.nonEmpty, "at least one quantile required")
-    qs.foreach { case (_, q) => require(q > 0.0 && q <= 1.0, s"quantile $q out of (0, 1]") }
-    val hist = df.select(col("timestep"), explode(col("data")).as("v"))
-      .groupBy("timestep", "v").agg(count(lit(1)).as("cnt"))
-    val cum = org.apache.spark.sql.expressions.Window
-      .partitionBy("timestep").orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val n = org.apache.spark.sql.expressions.Window.partitionBy("timestep")
-    val staged = hist
-      .withColumn("cum", sum(col("cnt")).over(cum))
-      .withColumn("n", sum(col("cnt")).over(n))
-    staged.groupBy("timestep")
-      .agg(
-        min(when(col("cum") >= ceil(col("n") * lit(qs.head._2)).cast("bigint"), col("v")))
-          .as(qs.head._1),
-        qs.tail.map { case (nm, q) =>
-          min(when(col("cum") >= ceil(col("n") * lit(q)).cast("bigint"), col("v"))).as(nm)
-        }: _*)
-  }
+  def quantilesPerTimestep(qs: Seq[(String, Double)]): DataFrame =
+    quantileDisc(Seq("timestep"), df.select(col("timestep"), explode(col("data")).as("v")), qs)
 
   /** Per-timestep LINEAR-INTERPOLATION quantiles — dask
     * `da.percentile(..., method="linear")`'s DEFAULT semantics (the
@@ -3039,36 +2800,8 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * product, d = h - floor(h) is exact (Sterbenz), fl(1-d) ==
     * fl(ceil(h)-h), multiplication is commutative, and the lo-term
     * leads the add in both engines — so hashes replay bit-for-bit. */
-  def quantileContPerTimestep(qs: Seq[(String, Double)]): DataFrame = {
-    require(qs.nonEmpty, "at least one quantile required")
-    qs.foreach { case (_, q) => require(q >= 0.0 && q <= 1.0, s"quantile $q out of [0, 1]") }
-    val hist = df.select(col("timestep"), explode(col("data")).as("v"))
-      .groupBy("timestep", "v").agg(count(lit(1)).as("cnt"))
-    val cum = org.apache.spark.sql.expressions.Window
-      .partitionBy("timestep").orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val n = org.apache.spark.sql.expressions.Window.partitionBy("timestep")
-    val staged = hist
-      .withColumn("cum", sum(col("cnt")).over(cum))
-      .withColumn("n", sum(col("cnt")).over(n))
-    // h = (n-1)*q in DOUBLE (DuckDB: (double)(n-1) * q); rank selectors
-    // are exact bigint floors/ceils of it
-    def h(q: Double): Column = (col("n") - 1).cast("double") * lit(q)
-    val aggs = qs.zipWithIndex.flatMap { case ((_, q), i) =>
-      Seq(
-        min(when(col("cum") >= floor(h(q)) + 1, col("v"))).as(s"_lo$i"),
-        min(when(col("cum") >= ceil(h(q)) + 1, col("v"))).as(s"_hi$i"),
-        min(h(q)).as(s"_h$i")) // per-timestep constant; min picks it
-    }
-    val picked = staged.groupBy("timestep").agg(aggs.head, aggs.tail: _*)
-    picked.select(col("timestep") +: qs.zipWithIndex.map { case ((nm, _), i) =>
-      val hh = col(s"_h$i")
-      val d = hh - floor(hh).cast("double") // exact fraction
-      when(floor(hh) === ceil(hh), col(s"_lo$i"))
-        .otherwise(col(s"_lo$i") * (lit(1.0) - d) + col(s"_hi$i") * d)
-        .as(nm)
-    }: _*)
-  }
+  def quantileContPerTimestep(qs: Seq[(String, Double)]): DataFrame =
+    quantileCont(Seq("timestep"), df.select(col("timestep"), explode(col("data")).as("v")), qs)
 
   /** Per-LINE exact quantiles along `axis` of a 2-d array (dask
     * `da.median(axis=)` / `da.percentile` per row — the "profile of a
@@ -3080,36 +2813,8 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * O(distinct values per line), and one histogram-bounded window +
     * conditional MIN per quantile finishes — percentile_disc semantics,
     * deterministic cross-engine. Emits `(timestep, idx, <qs...>)`. */
-  def axisQuantileRows(axis: Int, qs: Seq[(String, Double)]): DataFrame = {
-    require(geom.dims == 2, "axisQuantileRows requires a 2-d array")
-    require(axis == 0 || axis == 1)
-    require(qs.nonEmpty, "at least one quantile required")
-    qs.foreach { case (_, q) => require(q > 0.0 && q <= 1.0, s"quantile $q out of (0, 1]") }
-    val keep = 1 - axis
-    val shape = geom.chunkShape
-    val local =
-      if (keep == 0) (col("i") / shape(1)).cast("int") else col("i") % shape(1)
-    val hist = df
-      .select(col("timestep"), col("pos"), posexplode(col("data")).as(Seq("i", "v")))
-      .select(col("timestep"),
-        (col("pos")(keep).cast("bigint") * shape(keep) + local).as("idx"),
-        col("v"))
-      .groupBy("timestep", "idx", "v").agg(count(lit(1)).as("cnt"))
-    val cum = org.apache.spark.sql.expressions.Window
-      .partitionBy("timestep", "idx").orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val n = org.apache.spark.sql.expressions.Window.partitionBy("timestep", "idx")
-    val staged = hist
-      .withColumn("cum", sum(col("cnt")).over(cum))
-      .withColumn("n", sum(col("cnt")).over(n))
-    staged.groupBy("timestep", "idx")
-      .agg(
-        min(when(col("cum") >= ceil(col("n") * lit(qs.head._2)).cast("bigint"), col("v")))
-          .as(qs.head._1),
-        qs.tail.map { case (nm, q) =>
-          min(when(col("cum") >= ceil(col("n") * lit(q)).cast("bigint"), col("v"))).as(nm)
-        }: _*)
-  }
+  def axisQuantileRows(axis: Int, qs: Seq[(String, Double)]): DataFrame =
+    quantileDisc(Seq("timestep", "idx"), lineCells(axis), qs)
 
   /** Per-LINE linear-interpolation quantiles along `axis` of a 2-d
     * array — [[axisQuantileRows]]' dask-default (`method="linear"`)
@@ -3119,39 +2824,68 @@ final case class ChunkedArray(df: DataFrame, geom: ArrayGeometry) {
     * `quantile_cont`'s operand order replayed (see
     * [[quantileContPerTimestep]]'s exactness argument — it transfers
     * verbatim, the only change is the (timestep, idx) key). */
-  def axisQuantileContRows(axis: Int, qs: Seq[(String, Double)]): DataFrame = {
-    require(geom.dims == 2, "axisQuantileContRows requires a 2-d array")
+  def axisQuantileContRows(axis: Int, qs: Seq[(String, Double)]): DataFrame =
+    quantileCont(Seq("timestep", "idx"), lineCells(axis), qs)
+
+  /** The cells of a 2-d array keyed by their line across `axis`:
+    * `(timestep, idx, v)`, idx the kept axis' global coordinate. */
+  private def lineCells(axis: Int): DataFrame = {
+    require(geom.dims == 2, "per-line quantiles require a 2-d array")
     require(axis == 0 || axis == 1)
-    require(qs.nonEmpty, "at least one quantile required")
-    qs.foreach { case (_, q) => require(q >= 0.0 && q <= 1.0, s"quantile $q out of [0, 1]") }
     val keep = 1 - axis
     val shape = geom.chunkShape
     val local =
       if (keep == 0) (col("i") / shape(1)).cast("int") else col("i") % shape(1)
-    val hist = df
-      .select(col("timestep"), col("pos"), posexplode(col("data")).as(Seq("i", "v")))
+    df.select(col("timestep"), col("pos"), posexplode(col("data")).as(Seq("i", "v")))
       .select(col("timestep"),
         (col("pos")(keep).cast("bigint") * shape(keep) + local).as("idx"),
         col("v"))
-      .groupBy("timestep", "idx", "v").agg(count(lit(1)).as("cnt"))
-    val cum = org.apache.spark.sql.expressions.Window
-      .partitionBy("timestep", "idx").orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val n = org.apache.spark.sql.expressions.Window.partitionBy("timestep", "idx")
-    val staged = hist
-      .withColumn("cum", sum(col("cnt")).over(cum))
-      .withColumn("n", sum(col("cnt")).over(n))
+  }
+
+  /** The value histogram of `cells` per `keys` group: `(keys.., v, cnt,
+    * cum, n)` with the cumulative count through v and the group total.
+    * Cells collapse to (value, count) map-side, so the shuffle carries
+    * O(distinct values per group), never cells; both windows are
+    * bounded by one group's histogram. */
+  private def valueHistogram(keys: Seq[String], cells: DataFrame): DataFrame = {
+    val group = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
+    cells.groupBy((keys :+ "v").map(col): _*).agg(count(lit(1)).as("cnt"))
+      .withColumn("cum", sum(col("cnt")).over(group.orderBy("v")
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
+      .withColumn("n", sum(col("cnt")).over(group))
+  }
+
+  /** percentile_disc per `keys` group: for each q the smallest value
+    * whose cumulative count reaches ceil(q·n). */
+  private def quantileDisc(keys: Seq[String], cells: DataFrame,
+      qs: Seq[(String, Double)]): DataFrame = {
+    require(qs.nonEmpty, "at least one quantile required")
+    qs.foreach { case (_, q) => require(q > 0.0 && q <= 1.0, s"quantile $q out of (0, 1]") }
+    val picks = qs.map { case (nm, q) =>
+      min(when(col("cum") >= ceil(col("n") * lit(q)).cast("bigint"), col("v"))).as(nm)
+    }
+    valueHistogram(keys, cells).groupBy(keys.map(col): _*).agg(picks.head, picks.tail: _*)
+  }
+
+  /** Linear-interpolation quantiles per `keys` group, DuckDB
+    * `quantile_cont`'s operand order (see [[quantileContPerTimestep]]). */
+  private def quantileCont(keys: Seq[String], cells: DataFrame,
+      qs: Seq[(String, Double)]): DataFrame = {
+    require(qs.nonEmpty, "at least one quantile required")
+    qs.foreach { case (_, q) => require(q >= 0.0 && q <= 1.0, s"quantile $q out of [0, 1]") }
+    // h = (n-1)*q in DOUBLE (DuckDB: (double)(n-1) * q); rank selectors
+    // are exact bigint floors/ceils of it
     def h(q: Double): Column = (col("n") - 1).cast("double") * lit(q)
     val aggs = qs.zipWithIndex.flatMap { case ((_, q), i) =>
       Seq(
         min(when(col("cum") >= floor(h(q)) + 1, col("v"))).as(s"_lo$i"),
         min(when(col("cum") >= ceil(h(q)) + 1, col("v"))).as(s"_hi$i"),
-        min(h(q)).as(s"_h$i"))
+        min(h(q)).as(s"_h$i")) // per-group constant; min picks it
     }
-    val picked = staged.groupBy("timestep", "idx").agg(aggs.head, aggs.tail: _*)
-    picked.select(col("timestep") +: col("idx") +: qs.zipWithIndex.map { case ((nm, _), i) =>
+    val picked = valueHistogram(keys, cells).groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    picked.select(keys.map(col) ++ qs.zipWithIndex.map { case ((nm, _), i) =>
       val hh = col(s"_h$i")
-      val d = hh - floor(hh).cast("double")
+      val d = hh - floor(hh).cast("double") // exact fraction
       when(floor(hh) === ceil(hh), col(s"_lo$i"))
         .otherwise(col(s"_lo$i") * (lit(1.0) - d) + col(s"_hi$i") * d)
         .as(nm)
@@ -3180,6 +2914,8 @@ object ChunkedArray {
     * in one projection risk Janino/constant-pool codegen blowups). */
   val MaxCarryWidth = 256
   private val DEC = "DECIMAL(28,2)"
+  // truncating div == floor for the non-negative indices used here
+  private[arrays] def fdiv(a: Column, b: Int): Column = (a / lit(b)).cast("int")
   private[arrays] def zeroDec: Column = lit(0).cast(DEC)
   private[arrays] def castDec(c: Column): Column = c.cast(DEC)
   /** acc + x, rounding x to 2 decimals (exact for the 2-decimal payloads)

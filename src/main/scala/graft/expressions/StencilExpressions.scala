@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
+import graft.arrays.Halo
+
 /** Native kernel for the full-hypercube stencil fold
   * ([[graft.arrays.ChunkedArray.stencilNd]]'s output projection).
   *
@@ -18,7 +20,9 @@ import org.apache.spark.sql.types._
   * interpreted once per cell per tap. Correct, but the rank-3 3×3×3
   * face spent ~9.5 s at sf0.1 on what is microseconds of arithmetic
   * (VERDICT r13 profiling). This expression runs the identical
-  * resolution in ONE compiled JVM call per chunk:
+  * resolution in ONE compiled JVM call per chunk, over the message map
+  * [[graft.arrays.Halo]] assembles (its message kinds and strip layout
+  * are defined there, once, for every halo op):
   *
   *   - per-axis region resolution replays the Catalyst `resolve` logic
   *     literally (interior / neighbor-chunk strip / global boundary,
@@ -61,8 +65,7 @@ case class StencilConvolve(
         acc.flatMap(p => (0 until m).map(p :+ _)))
     cart(kshape).map(_.zipWithIndex.map { case (i, d) => i - r(d) }.toArray).toArray
   }
-  // per-direction strip extents/strides: exts_d = r_d where the
-  // direction is nonzero, else shape_d (ChunkedArray.boxFor's contract)
+  // per-direction strip extents: graft.arrays.Halo.stripExtents
   private def extsOf(src: Array[Int]): Array[Int] =
     Array.tabulate(n)(d => if (src(d) == 0) shapeA(d) else r(d))
 
@@ -76,7 +79,7 @@ case class StencilConvolve(
     var i = 0
     while (i < m.numElements()) {
       val k = keys.getUTF8String(i).toString
-      if (k == "c") core = vals.getArray(i) else dirs.put(k, vals.getArray(i))
+      if (k == Halo.Core) core = vals.getArray(i) else dirs.put(k, vals.getArray(i))
       i += 1
     }
     val out = new Array[Any](elems)
@@ -126,8 +129,7 @@ case class StencilConvolve(
               if (core.isNullAt(flat)) poisoned = true else v = core.getDouble(flat)
             } // absent core = zero chunk
           } else {
-            val kind = "n" + src.mkString(",")
-            val strip = dirs.get(kind)
+            val strip = dirs.get(Halo.from(src))
             if (strip != null) {
               val exts = extsOf(src)
               var flat = 0
@@ -188,7 +190,8 @@ case class StencilConvolve(
   * and fold association in one compiled JVM call per chunk:
   *
   *   - neighbor reads resolve in-chunk from the core, off-chunk from
-  *     the "l$d"/"h$d" face messages, zero at the global boundary
+  *     the [[graft.arrays.Halo]] face messages (kinds and face layout
+  *     defined there), zero at the global boundary
   *     (the Laplacian is always zero-padded),
   *   - an absent core is a zero chunk; an absent face message or null
   *     face element reads 0.0 (the Catalyst coalesce); a null CORE
@@ -215,15 +218,9 @@ case class StencilLaplacianKernel(msgs: Expression, tpos: Expression,
   private val lastPos: Array[Int] = chunksPerDim.map(_ - 1).toArray
   private val elems: Int = shape.product
   private val shapeA: Array[Int] = shape.toArray
-  // slabStr(d)(j): j's row-major stride inside the face slab of dim d
-  // (0 on j == d) — ChunkedArray.remWithSlabStrides' contract
-  private val slabStr: Array[Array[Int]] = Array.tabulate(n) { d =>
-    val rem = (0 until n).filterNot(_ == d)
-    val ss = rem.map(shapeA).scanRight(1)(_ * _).tail
-    val out = new Array[Int](n)
-    rem.zip(ss).foreach { case (j, s) => out(j) = s }
-    out
-  }
+  // slabStr(d)(j): j's row-major stride inside the face strip of dim d
+  private val slabStr: Array[Array[Int]] =
+    Array.tabulate(n)(d => Halo.faceStrides(shape, d).toArray)
 
   def compute(mAny: Any, tposAny: Any): ArrayData = {
     val m = mAny.asInstanceOf[MapData]
@@ -235,7 +232,7 @@ case class StencilLaplacianKernel(msgs: Expression, tpos: Expression,
     var i = 0
     while (i < m.numElements()) {
       val k = keys.getUTF8String(i).toString
-      if (k == "c") core = vals.getArray(i) else faces.put(k, vals.getArray(i))
+      if (k == Halo.Core) core = vals.getArray(i) else faces.put(k, vals.getArray(i))
       i += 1
     }
     val out = new Array[Any](elems)
@@ -265,7 +262,7 @@ case class StencilLaplacianKernel(msgs: Expression, tpos: Expression,
             if (core.isNullAt(f)) poisoned = true else lo = core.getDouble(f)
           }
         } else if (tpos(d) != 0) {
-          val strip = faces.get("l" + d)
+          val strip = faces.get(Halo.lowFace(d))
           if (strip != null && !strip.isNullAt(slabI)) lo = strip.getDouble(slabI)
         }
         var hi = 0.0
@@ -276,7 +273,7 @@ case class StencilLaplacianKernel(msgs: Expression, tpos: Expression,
               if (core.isNullAt(f)) poisoned = true else hi = core.getDouble(f)
             }
           } else if (tpos(d) != lastPos(d)) {
-            val strip = faces.get("h" + d)
+            val strip = faces.get(Halo.highFace(d))
             if (strip != null && !strip.isNullAt(slabI)) hi = strip.getDouble(slabI)
           }
         }

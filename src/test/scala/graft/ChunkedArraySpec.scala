@@ -186,6 +186,41 @@ class ChunkedArraySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rr.getAs[Double]("p100") == 8.0)
   }
 
+  test("axisQuantileRows/axisQuantileContRows match sorted-line references on both axes") {
+    // 4x6 array as 2x2 chunks of 2x3; v(i,j) = (7i + 3j) % 5 repeats
+    // values inside every line, so ties straddle chunk boundaries
+    def v(i: Int, j: Int): Double = ((7 * i + 3 * j) % 5).toDouble
+    val chunks = for (cr <- 0 to 1; cc <- 0 to 1) yield
+      (0L, Seq(cr, cc), for (i <- 0 to 1; j <- 0 to 2) yield v(2 * cr + i, 3 * cc + j))
+    val arr = ChunkedArray(chunks.toDF("timestep", "pos", "data"),
+      ArrayGeometry(Seq(2, 2), Seq(2, 3)))
+    val qs = Seq(("p25", 0.25), ("med", 0.5), ("p90", 0.9))
+    for (axis <- 0 to 1) {
+      // idx is the kept axis' coordinate; the line runs across `axis`
+      val lines = if (axis == 0) 0 until 6 else 0 until 4
+      def line(idx: Int): Seq[Double] =
+        (if (axis == 0) (0 until 4).map(v(_, idx)) else (0 until 6).map(v(idx, _))).sorted
+      def byIdx(df: DataFrame) = df.collect().map(r => r.getAs[Long]("idx") -> r).toMap
+      val disc = byIdx(arr.axisQuantileRows(axis, qs))
+      val cont = byIdx(arr.axisQuantileContRows(axis, qs))
+      assert(disc.keySet == lines.map(_.toLong).toSet && cont.keySet == disc.keySet)
+      for (idx <- lines; (nm, q) <- qs) {
+        val s = line(idx)
+        val n = s.length
+        // percentile_disc: the first value whose cumulative count
+        // reaches ceil(q·n)
+        val wantDisc = s(math.ceil(n * q).toInt - 1)
+        // linear: h = (n-1)·q, lo·(1-d) + hi·d in DuckDB's operand order
+        val h = (n - 1).toDouble * q
+        val (lo, hi) = (s(math.floor(h).toInt), s(math.ceil(h).toInt))
+        val d = h - math.floor(h)
+        val wantCont = if (math.floor(h) == math.ceil(h)) lo else lo * (1.0 - d) + hi * d
+        assert(disc(idx.toLong).getAs[Double](nm) == wantDisc, s"disc axis $axis line $idx $nm")
+        assert(cont(idx.toLong).getAs[Double](nm) == wantCont, s"cont axis $axis line $idx $nm")
+      }
+    }
+  }
+
   test("cumsumAxis scans any axis of a 2-d array across chunk lines") {
     // value(i,j) = 10i + j; axis 0 scans down columns:
     // out(i,j) = sum_{r<=i} (10r + j) = 10*i*(i+1)/2 + (i+1)*j
@@ -392,6 +427,21 @@ class ChunkedArraySpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the plan really took the exploded-carry branch
     val plan = wide.cumsumAxis(axis = 0).df.queryExecution.executedPlan.toString
     assert(plan.contains("Generate"), "wide slabs must posexplode the carry")
+    // cumprodAxis rides the same wide carry: small-integer cells 1..3
+    // keep every 4-long column product exact
+    def small(i: Int, j: Int): Double = 1.0 + (i + j) % 3
+    val smallChunks = for (cr <- 0 to 1) yield
+      (0L, Seq(cr, 0), for (i <- 0 to 1; j <- 0 until w) yield small(2 * cr + i, j))
+    val wideSmall = ChunkedArray(smallChunks.toDF("timestep", "pos", "data"),
+      ArrayGeometry(Seq(2, 1), Seq(2, w)))
+    val prod = wideSmall.cumprodAxis(axis = 0)
+    val gotProd = prod.rows2d.collect()
+      .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j")) -> r.getAs[Double]("value")).toMap
+    for (i <- 0 to 3; j <- Seq(0, 1, 137, 255, 299))
+      assert(gotProd((i.toLong, j.toLong)) == (0 to i).map(small(_, j)).product,
+        s"wide product carry at ($i, $j)")
+    assert(prod.df.queryExecution.executedPlan.toString.contains("Generate"),
+      "wide cumprod slabs must posexplode the carry")
   }
 
   test("cumsumAxis on a 1-d array replays cumsumRows exactly") {

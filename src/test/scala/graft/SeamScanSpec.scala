@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Library code has one spelling per mechanism: no env-var reads, no
   * process-global mutable toggles and no memo map outside the one
-  * registry, and the streaming loop's idle TTL is spelled only in
-  * KeyedState. An A/B seam is a paired experiment on a branch, not a
+  * registry, the streaming loop's idle TTL is spelled only in
+  * KeyedState, and the array core assembles halos and divides indices
+  * in one place each. An A/B seam is a paired experiment on a branch, not a
   * switch shipped in the operators. Mains (Bench, Verify, ScaleProbe)
   * sit outside the scanned directories. */
 class SeamScanSpec extends AnyFunSuite {
@@ -43,6 +44,18 @@ class SeamScanSpec extends AnyFunSuite {
     val found = hits(files.filterNot(f => allowed(f.getFileName.toString)))(
       l => map.findFirstIn(l).isDefined)
     assert(found.isEmpty, s"memo maps outside the registry:\n${found.mkString("\n")}")
+  }
+
+  test("the array core spells its halo assembly and its fdiv once") {
+    // roll, pad, every stencil and HaloStencil assemble their messages
+    // through Halo; a second map_from_entries(collect_list(..)) forks
+    // the halo exchange, a second fdiv the index geometry
+    def under(d: String) = files.filter(_.startsWith(Paths.get(s"src/main/scala/graft/$d")))
+    val assemblies = hits(under("arrays") ++ under("streaming"))(
+      _.contains("map_from_entries(collect_list"))
+    assert(assemblies.size == 1, s"halo assembly spelled more than once:\n${assemblies.mkString("\n")}")
+    val fdivs = hits(under("arrays"))(_.contains("def fdiv"))
+    assert(fdivs.size == 1, s"fdiv spelled more than once:\n${fdivs.mkString("\n")}")
   }
 
   test("the streaming loop spells its idle TTL once, in KeyedState") {

@@ -55,7 +55,7 @@ class StencilKernelSpec extends AnyFunSuite {
       val boundary = if (caseNo % 2 == 0) "zero" else "reflect"
       val tag = s"case $caseNo rank=$rank boundary=$boundary"
       val nat = rowsOf(arr.stencilNd(kernel, kshape, boundary))
-      val cat = rowsOf(arr.stencilNd(kernel, kshape, boundary, native = false))
+      val cat = rowsOf(arr.catalystStencilNd(kernel, kshape, boundary))
       assertBitIdentical(nat, cat, tag)
     }
   }
@@ -86,7 +86,7 @@ class StencilKernelSpec extends AnyFunSuite {
       val boundary = if (caseNo % 2 == 0) "zero" else "reflect"
       val tag = s"case $caseNo rank=$rank axis=$axis boundary=$boundary"
       val nat = rowsOf(arr.stencilAxis(axis, weights, boundary))
-      val cat = rowsOf(arr.stencilAxis(axis, weights, boundary, native = false))
+      val cat = rowsOf(arr.catalystStencilAxis(axis, weights, boundary))
       assertBitIdentical(nat, cat, tag)
     }
   }
@@ -98,7 +98,7 @@ class StencilKernelSpec extends AnyFunSuite {
       val arr = chunkedRandom(rnd, rank, withNulls = caseNo % 3 == 0)
       val tag = s"case $caseNo rank=$rank"
       val nat = rowsOf(arr.stencilLaplacian())
-      val cat = rowsOf(arr.stencilLaplacian(native = false))
+      val cat = rowsOf(arr.catalystStencilLaplacian())
       assertBitIdentical(nat, cat, tag)
     }
   }
